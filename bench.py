@@ -73,7 +73,6 @@ HEADLINE = [
     "mix_weights",
     "pii_scrub",
     "curate_corpus",
-    # rotated past the driver's 50-row gate cap -> timed here instead
     "token_count",
     "ann_lsh_buckets",
     # round-5 additions (stream_bug_versions excluded like the other

@@ -7,7 +7,7 @@ Elasticsearch.  This package re-expresses those semantics — and the
 large-scale training-data-pipeline operators that naturally extend
 them — as declarative Spark DataFrame plans that Catalyst/Tungsten can
 optimize (predicate pushdown, broadcast joins, whole-stage codegen,
-AQE), so the same code runs on local[32] for tests and a 1000-executor
+AQE), so the same code runs in local mode for tests and a 1000-executor
 cluster for 100 TB.
 
 Layout:

@@ -38,226 +38,6 @@ _QUERY_MODULES = (
 
 _loaded = False
 
-# Driver-visibility priority.  The external correctness gate records
-# rows for only the FIRST 50 entries of ``queries()`` (a count cap,
-# observed since rounds 1-2).  ``load_all`` therefore reorders the
-# catalog dict: names listed here come first, the rest keep
-# registration order, then the twice-green rotation tail.
-#
-# Rotation policy (the catalog exceeds 3x the 50-row cap; full
-# cycle = ceil(N/50) = 4 windows at the current 185): (1) never-driver-tested
-# queries lead, (2) then queries whose BEHAVIOR this round touched,
-# (3) then the stalest green rows, oldest driver round first; the
-# local gate (tools/verify_local.py, driver-strict canonicalizer,
-# committed as LOCAL_GATE_rN.json) covers ALL queries every round
-# regardless of window position, and ROTATION.md ledgers each
-# query's newest driver row.
-#
-# r16-window composition (per the standing rotation policy): the
-# round's ONE never-driver-tested entry leads (mix_apply #191, the
-# mixing materializer), then the two behavior-touched entries
-# (bpe_encode: map_mode={broadcast,join} large-vocab fallback wired;
-# stream_bpe_encode: frozen tokenizer now a persisted store artifact
-# loaded at stream start), then the full 37-row r12-stale cohort
-# (the r15 verdict's rotate-next list, exactly), topped up to 50
-# with the 9 oldest r13 greens in ledger order (the verdict said
-# 13, assuming no new/touched entries; the TWO never-tested
-# entries (mix_apply #192, bpe_encode_join #191) and the two
-# behavior-touched ones take precedence per the standing policy).
-_PRIORITY = (
-    "mix_apply",
-    "bpe_encode_join",
-    "bpe_encode",
-    "stream_bpe_encode",
-    "comments_etl",
-    "curate_corpus",
-    "decontam_overlap",
-    "dedup_chunk",
-    "dedup_components",
-    "dedup_exact",
-    "dedup_latest",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "dedup_simhash_pairs",
-    "dependency_edges",
-    "previous_values_paned",
-    "set_final_salted",
-    "skyline_orders",
-    "stream_attribution",
-    "stream_attribution_outer",
-    "stream_decontam",
-    "stream_dedup",
-    "stream_doc_chunks",
-    "stream_hll",
-    "stream_previous_values_ooo",
-    "stream_rollup",
-    "stream_sessionize_ooo",
-    "stream_snapshot",
-    "tpch_q10",
-    "tpch_q12",
-    "tpch_q13",
-    "tpch_q15",
-    "tpch_q16",
-    "tpch_q18",
-    "tpch_q19",
-    "tpch_q21",
-    "tpch_q22",
-    "tpch_q3",
-    "tpch_q5",
-    "unpivot_measures",
-    "value_percentiles",
-    "ann_ivf_pq",
-    "bpe_apply",
-    "bpe_pair_counts",
-    "canonical_fields",
-    "cc_fuzzy_match",
-    "char_lm_perplexity",
-    "compaction_plan",
-    "cooccurrence_pmi",
-    "count_min_freq",
-)
-# Rotated past position 50: every entry here has a GREEN r12, r13
-# or r14 driver row (the freshest in the ledger), is re-verified by
-# the local gate (tools/verify_local.py, driver-strict
-# canonicalizer) every round, and rotates back in r16+.
-_DEPRIORITY = (
-    "date_normalize",
-    "activity_invert",
-    "alias_analysis",
-    "alias_compact",
-    "alias_minimize",
-    "alias_resolve",
-    "ann_ivf",
-    "ann_ivf_nprobe",
-    "ann_lsh_buckets",
-    "ann_pq",
-    "ann_topk",
-    "anomaly_mad",
-    "anomaly_mad_hist",
-    "attachment_versions",
-    "bloom_decontam",
-    "bloom_join_prune",
-    "bm25_topk",
-    "bucketed_join_zero_shuffle",
-    "bug_version_docs",
-    "bug_version_full",
-    "chunk_dedup_pack",
-    "compact_store",
-    "cube_order_stats",
-    "decontam_neardup",
-    "dedup_containment",
-    "dedup_jaccard_invindex",
-    "dedup_ngram_jaccard",
-    "dedup_spans",
-    "dedup_spans_apply",
-    "diff_apply",
-    "diff_rollback",
-    "doc_chunks",
-    "doc_fingerprint",
-    "docs_json_roundtrip",
-    "dsir_weights",
-    "dual_pipeline_cutover",
-    "embedding_neardup",
-    "embedding_outliers",
-    "embedding_pca",
-    "es_alias_cutover",
-    "es_docs",
-    "es_file_extract",
-    "events_funnel",
-    "events_sessionize",
-    "events_sessionize_native",
-    "events_sessionize_paned",
-    "filter_funnel",
-    "flag_fuzzy_match",
-    "flag_parse",
-    "flag_state_versions",
-    "frequent_pairs",
-    "full_backfill_clustered",
-    "full_backfill_resume",
-    "heavy_hitters_ngrams",
-    "hist_quantile",
-    "hll_distinct",
-    "html_strip",
-    "incremental_touched",
-    "interval_asof_join",
-    "json_props_extract",
-    "key_skew_stats",
-    "kmeans_embeddings",
-    "kmv_source_overlap",
-    "kmv_source_overlap_sketch",
-    "lang_id",
-    "merge_order_union",
-    "mix_weights",
-    "mm_features",
-    "mm_frame_sample",
-    "mm_resize",
-    "moving_average",
-    "moving_average_ranged",
-    "nested_docs",
-    "ngram_novelty",
-    "normalize_scrub",
-    "orders_fulfillment",
-    "pagerank_trade",
-    "partition_prune_stats",
-    "pii_scrub",
-    "pivot_event_counts",
-    "previous_values",
-    "private_retract",
-    "private_screen",
-    "private_subentity",
-    "profile_table",
-    "profile_table_hll",
-    "quality_repetition",
-    "quota_sample",
-    "range_window_load",
-    "replicate_cycle",
-    "replicate_pending",
-    "rolling_distinct_users",
-    "rollup_returns",
-    "sample_stratified",
-    "screen_mask",
-    "semdedup",
-    "seq_packing",
-    "seq_packing_ids",
-    "set_accumulate",
-    "set_final",
-    "shuffle_shards",
-    "snapshot_asof",
-    "snapshot_versions",
-    "state_rollforward",
-    "state_rollforward_paned",
-    "stratified_split",
-    "stream_bug_versions",
-    "stream_dedup_spans",
-    "stream_heavy_hitters",
-    "stream_heavy_hitters_capped",
-    "stream_neardup_ingest",
-    "stream_previous_values",
-    "stream_sessionize",
-    "text_quality",
-    "tfidf_top_terms",
-    "time_rollup",
-    "token_count",
-    "topk_per_group",
-    "tpch_q1",
-    "tpch_q11",
-    "tpch_q14",
-    "tpch_q17",
-    "tpch_q2",
-    "tpch_q20",
-    "tpch_q4",
-    "tpch_q6",
-    "tpch_q7",
-    "tpch_q8",
-    "tpch_q9",
-    "triangle_count",
-    "triangle_count_scaled",
-    "trunc_uncertain",
-    "winnow_fingerprints",
-    "winnow_pairs",
-    "zorder_layout",
-)
-
 
 def register(name: str, oracle: str | None = None):
     """Decorator: add a query (and optional DuckDB oracle) to the catalog."""
@@ -279,15 +59,4 @@ def load_all() -> None:
         return
     for mod in _QUERY_MODULES:
         import_module(mod)
-    # Reorder for the driver's 50-row cap: priority first, then
-    # registration order, then the twice-green rotation tail.
-    ordered = [n for n in _PRIORITY if n in QUERIES]
-    ordered += [
-        n for n in QUERIES if n not in ordered and n not in _DEPRIORITY
-    ]
-    ordered += [n for n in _DEPRIORITY if n in QUERIES]
-    for mapping in (QUERIES, ORACLES):
-        snap = {n: mapping[n] for n in ordered if n in mapping}
-        mapping.clear()
-        mapping.update(snap)
     _loaded = True

@@ -2,7 +2,8 @@
 
 Defaults mirror what we would deploy on a large cluster (AQE on,
 skew-join handling, Arrow for the few pandas exchanges) scaled down to
-the local[32] test harness.  All operators in this package work with
+a local session: ``local[$SPARK_GRAFT_CPUS]``, or one slot per host
+core when that is unset.  All operators in this package work with
 ANY session (the verify driver passes its own); this factory is for
 tests, bench.py, and standalone runs.
 """
@@ -19,7 +20,7 @@ def get_spark(
     cpus: int | str | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    cpus = str(cpus or os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = str(cpus or os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
     # shuffle partitions ~= cores locally; on a real cluster this is
     # 2-3x total cores, and AQE coalesces the tail.
     shuffle = str(shuffle_partitions or cpus)

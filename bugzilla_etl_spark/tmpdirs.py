@@ -60,17 +60,20 @@ def pin(frame, level=None):
     constant, so the columnar cache RLE-compresses it to one
     dictionary entry — no per-row storage cost.  Released via the
     cleanup registry at the next ``gc_now``/process exit, exactly
-    like a tracked tempdir."""
+    like a tracked tempdir.  The column is named from the nonce too,
+    so no user column can share its name."""
     import uuid
 
     from pyspark.sql import functions as F
     from pyspark.storagelevel import StorageLevel
 
-    pinned = frame.withColumn(
-        "_pin_nonce", F.lit(uuid.uuid4().hex)
-    ).persist(level if level is not None else StorageLevel.MEMORY_AND_DISK)
+    nonce = uuid.uuid4().hex
+    col = f"_pin_{nonce}"
+    pinned = frame.withColumn(col, F.lit(nonce)).persist(
+        level if level is not None else StorageLevel.MEMORY_AND_DISK
+    )
     register_cleanup(pinned.unpersist)
-    return pinned.drop("_pin_nonce")
+    return pinned.drop(col)
 
 
 def scoped_conf(spark, key: str, value: str) -> None:

@@ -50,9 +50,6 @@ def asof_case(draw):
 _spark = None
 
 
-import pytest
-
-
 def _get_spark():
     global _spark
     if _spark is None:
@@ -64,7 +61,6 @@ def _get_spark():
 
 @given(case=asof_case())
 @settings(max_examples=12, deadline=None)
-@pytest.mark.slow
 def test_asof_join_matches_naive(case):
     """Union-window as-of join == naive per-row max-scan (the O(L x R)
     definition)."""
@@ -130,7 +126,6 @@ def pv_log(draw):
 
 @given(rows=pv_log())
 @settings(max_examples=10, deadline=None)
-@pytest.mark.slow
 def test_previous_values_matches_naive_setprevious(rows):
     """The window formulation == a literal Python transcription of the
     reference's setPrevious bookkeeping (parse_bug_history.py:783):
@@ -229,7 +224,6 @@ _trunc_val = st.one_of(
     )
 )
 @settings(max_examples=20, deadline=None)
-@pytest.mark.slow
 def test_scrub_truncated_matches_reference_branch(rows):
     """The Spark column expressions in scrub_truncated must agree with
     a literal Python transcription of parse_bug_history.py:137-156 on
@@ -302,7 +296,6 @@ def _ref_canonical(field, value, aliases, email_fields, time_fields,
     )
 )
 @settings(max_examples=15, deadline=None)
-@pytest.mark.slow
 def test_canonicalize_fields_matches_reference_dispatch(rows):
     """canonicalize_fields' column dispatch must agree with a literal
     transcription of canonical() on adversarial values — null tokens
@@ -527,7 +520,6 @@ def cc_case(draw):
 
 @given(cases=cc_case())
 @settings(max_examples=15, deadline=None)
-@pytest.mark.slow
 def test_cc_fuzzy_rescue_matches_reference_loop(cases):
     """cc_fuzzy_rescue == the transcribed reference rescue loop on
     random CC sets: same exact/fuzzy/unmatched partition, same
@@ -649,7 +641,6 @@ def flag_case(draw):
 
 @given(cases=flag_case())
 @settings(max_examples=15, deadline=None)
-@pytest.mark.slow
 def test_flag_tiered_match_matches_reference_cascade(cases):
     """flag_tiered_match == the transcribed findFlag cascade on
     random flag lists (case-mangled names, unparseable values,
@@ -852,7 +843,6 @@ def flag_change_log(draw):
 
 @given(rows=flag_change_log())
 @settings(max_examples=10, deadline=None)
-@pytest.mark.slow
 def test_flag_state_versions_matches_reference_replay(rows):
     """flag_state_intervals + flag_states_per_version (the SCD2
     re-expression) == the literal reference replay loop, on random
@@ -930,7 +920,6 @@ def attach_change_log(draw):
 
 @given(rows=attach_change_log())
 @settings(max_examples=10, deadline=None)
-@pytest.mark.slow
 def test_attachment_versions_matches_reference_replay(rows):
     """subentity_changepoints + nest_changepoints_per_version (the
     rendered-changepoint scale path the catalog entry uses) == the

@@ -99,7 +99,6 @@ def _oracle_slice(spark, sf_dir, names):
         assert got == want, f"{n} diverges from oracle on {sf_dir}"
 
 
-@pytest.mark.slow
 def test_unicode_hardened_representative(spark, tmp_path):
     """Text-path queries must stay value-identical to the oracle on
     multi-byte corpora: byte-vs-codepoint length units, regex word
@@ -550,7 +549,6 @@ def _with_arrival(monkeypatch, mode="delay:12:5400"):
     monkeypatch.setenv(ARRIVAL_ENV, mode)
 
 
-@pytest.mark.slow
 def test_stream_pv_ooo_converges_under_disorder(
     spark, dense_dir, monkeypatch
 ):
@@ -573,7 +571,6 @@ def test_stream_pv_ooo_converges_under_disorder(
     assert got == want
 
 
-@pytest.mark.slow
 def test_stream_sessionize_ooo_converges_under_disorder(
     spark, dense_dir, monkeypatch
 ):
@@ -601,7 +598,6 @@ def test_stream_sessionize_ooo_converges_under_disorder(
     assert got == want_keys
 
 
-@pytest.mark.slow
 def test_classic_stream_pv_diverges_under_disorder(
     spark, dense_dir, monkeypatch
 ):

@@ -10,10 +10,6 @@
 * sf1 gate XFAIL mechanics (ADVICE 3): a documented oracle-side
   limitation must not make the gate's exit code permanently
   nonzero, and a real failure must flip it regardless of XFAIL.
-* rotation pending-ingest surfacing (ADVICE 4): when the driver has
-  written a newer CORRECTNESS artifact that is not yet committed,
-  the state must show up in the pytest run as a warning — exit 0
-  alone was shown (r12 advice) to let a forgotten ingest linger.
 * backfill split accounting (round-12 verdict task 1): the
   landing/validate/walk split recorded for bench must sum to ~the
   entry wall, else the diagnosis artifact lies.
@@ -23,12 +19,9 @@ from __future__ import annotations
 
 import math
 import os
-import subprocess
 import sys
-import warnings
 
 import duckdb
-import pytest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -95,23 +88,6 @@ def test_sf1_gate_xfail_split(monkeypatch):
     monkeypatch.setattr(sf1_gate, "XFAIL", {"a"})
     real, xfailed = sf1_gate.evaluate(rec)
     assert real == ["b", "c"] and xfailed == []
-
-
-# ---- rotation pending-ingest warning ----------------------------------
-
-def test_rotation_pending_ingest_is_surfaced():
-    r = subprocess.run(
-        [sys.executable, "tools/rotation_ledger.py", "--check"],
-        cwd=REPO, capture_output=True, text=True,
-    )
-    assert r.returncode == 0, r.stdout + r.stderr
-    if "PENDING INGEST" in r.stdout:
-        # surfaced as a pytest warning so the state is visible in the
-        # suite summary, not just in a tool nobody reruns (r12 advice)
-        warnings.warn(
-            "rotation ledger: " + r.stdout.strip().splitlines()[-1],
-            UserWarning, stacklevel=1,
-        )
 
 
 # ---- backfill split accounting ----------------------------------------

@@ -1,9 +1,5 @@
 """Round-14 additions:
 
-* rotation ``--ingest`` (round-13 verdict task 8): one-step round
-  close — stage untracked round artifacts, regenerate ROTATION.md,
-  stage it.  Tested against a throwaway git repo so the real ledger
-  is untouched.
 * bpe_learn round persist (ADVICE 2): exactly one vocab-grain cache
   handle lives after training (the final round's input), so the
   per-round collect cannot recompute prior rounds' merge folds.
@@ -12,52 +8,10 @@
 from __future__ import annotations
 
 import os
-import subprocess
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
-
-
-import pytest
-
-
-def _git(cwd, *args):
-    return subprocess.run(
-        ["git", *args], cwd=cwd, capture_output=True, text=True, check=True
-    )
-
-
-def test_rotation_ingest_stages_untracked_artifacts(tmp_path, monkeypatch):
-    from tools import rotation_ledger as rl
-
-    _git(tmp_path, "init", "-q")
-    (tmp_path / "CORRECTNESS_r98.json").write_text("{}")
-    _git(tmp_path, "add", "CORRECTNESS_r98.json")
-    # untracked artifacts --ingest must stage:
-    (tmp_path / "CORRECTNESS_r99.json").write_text("{}")
-    (tmp_path / "BENCH_r99.json").write_text("{}")
-    # a non-artifact untracked file it must NOT stage:
-    (tmp_path / "notes.txt").write_text("x")
-    monkeypatch.setattr(rl, "REPO", str(tmp_path))
-    rl.ingest_artifacts()
-    staged = set(
-        _git(tmp_path, "diff", "--cached", "--name-only").stdout.split()
-    )
-    assert "CORRECTNESS_r99.json" in staged
-    assert "BENCH_r99.json" in staged
-    assert "notes.txt" not in staged
-
-
-def test_rotation_ingest_noop_when_all_tracked(tmp_path, monkeypatch, capsys):
-    from tools import rotation_ledger as rl
-
-    _git(tmp_path, "init", "-q")
-    (tmp_path / "CORRECTNESS_r99.json").write_text("{}")
-    _git(tmp_path, "add", "CORRECTNESS_r99.json")
-    monkeypatch.setattr(rl, "REPO", str(tmp_path))
-    rl.ingest_artifacts()
-    assert "no untracked round artifacts" in capsys.readouterr().out
 
 
 def test_triangle_count_scaled_second_setting(spark, duck, sf_dir):
@@ -168,7 +122,6 @@ def test_stream_dedup_spans_bucketed_matches_oracle(spark, duck, sf_dir):
     assert_same(sdf, duck, entry_mod.oracle_sql()["stream_dedup_spans"])
 
 
-@pytest.mark.slow
 def test_stream_bug_versions_split_and_pin_restore(spark, sf_dir):
     """The r14 diagnosis wiring: the run records a per-phase wall
     split (restore/discover/append/rebuild_write/swap) in

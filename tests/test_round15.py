@@ -199,7 +199,6 @@ def test_stream_bpe_encode_matches_batch_oracle(spark, duck, sf_dir):
     same(sdf, duck, catalog.ORACLES["stream_bpe_encode"])
 
 
-@pytest.mark.slow
 def test_stream_bpe_encode_unk_policy_fires(spark, tmp_path):
     """The OOV policy EXERCISED, not just written (the sf corpora
     share one vocabulary across halves, so they never produce OOV):
@@ -270,7 +269,6 @@ def test_seq_packing_ids_invariants(spark, sf_dir):
         spi.unpersist()
 
 
-@pytest.mark.slow
 def test_stream_bug_versions_fine_split_decomposition(spark, sf_dir):
     """The fine_split diagnosis mode (r14 verdict task 3) must stay
     exercised, not just shipped: fs_hist_read/fs_build/fs_write are
@@ -444,17 +442,12 @@ def test_stale_artifact_keeps_median_without_probe(tmp_path):
 
 def test_calibration_members_are_pinned_and_benchmarked():
     """Every calibration query must be in BASELINE.md's pin table AND
-    in the newest committed bench lane — a renamed/dropped member
-    would silently shrink the median's sample."""
-    import json
-    from pathlib import Path
+    in bench.py's HEADLINE list — a renamed/dropped member would
+    silently shrink the median's sample."""
+    import bench
 
     BA = _ba()
     pins = BA.parse_pins()
-    repo = Path(__file__).resolve().parent.parent
-    bench = json.loads(
-        max(repo.glob("BENCH_LOCAL_r*.json")).read_text()
-    )["queries"]
     for q in BA.CALIBRATION:
         assert q in pins, q
-        assert q in bench, q
+        assert q in bench.HEADLINE, q

@@ -367,7 +367,6 @@ def test_load_tokenizer_empty_artifact_dir(spark, tmp_path):
     assert out[0].n_tokens == 2 and out[0].token_ids == "0 0"
 
 
-@pytest.mark.slow
 def test_stream_bpe_encode_serves_prebuilt_artifact(spark, sf_dir, tmp_path):
     """The production call shape: a tokenizer artifact saved BEFORE
     the stream exists is served via tokenizer_path and yields rows

@@ -15,9 +15,6 @@ from pyspark.sql import functions as F
 from bugzilla_etl_spark.plans import catalog
 
 
-import pytest
-
-
 def _q(name, spark, sf_dir):
     catalog.load_all()
     return catalog.QUERIES[name](spark, sf_dir)
@@ -123,7 +120,6 @@ def test_anomaly_mad_hist_knob_within_bin_width(spark, sf_dir):
         ), (k, e, h)
 
 
-@pytest.mark.slow
 def test_stream_attribution_outer_evicts_null_rows(spark, sf_dir):
     """The outer join's defining behavior: every purchase with no
     click in its window emits EXACTLY ONE null-click row (watermark
@@ -321,7 +317,6 @@ def test_bucketed_join_plans_zero_join_shuffle(spark, sf_dir):
     assert "SelectedBucketsCount" in plan, plan
 
 
-@pytest.mark.slow
 def test_catalog_survives_empty_tables(spark, sf_dir, tmp_path):
     """The no-new-data incremental run: every operator must behave
     on ZERO-row inputs (empty partitions and empty increments are

@@ -16,9 +16,6 @@ from pyspark.sql import functions as F
 from bugzilla_etl_spark.plans import catalog
 
 
-import pytest
-
-
 def _q(name, spark, sf_dir):
     catalog.load_all()
     return catalog.QUERIES[name](spark, sf_dir)
@@ -137,7 +134,6 @@ def test_backfill_resume_skips_landed_blocks(spark, sf_dir, tmp_path):
     )
 
 
-@pytest.mark.slow
 def test_backfill_any_crash_point_converges(spark, sf_dir, tmp_path):
     """Crash-point sweep: dying after ANY number of landed blocks
     (1..4 of 5) and resuming must converge to the one-shot build —

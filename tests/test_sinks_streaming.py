@@ -16,9 +16,6 @@ from bugzilla_etl_spark.sinks import es as es_sink
 from bugzilla_etl_spark.sources import load_table
 
 
-import pytest
-
-
 def test_es_bulk_lines_shape(spark, sf_dir, tmp_path):
     ev = load_table(spark, sf_dir, "events").limit(100)
     out = str(tmp_path / "bulk")
@@ -470,7 +467,6 @@ def test_stream_sessionize_matches_batch_sessionize(spark, sf_dir):
     assert got == want
 
 
-@pytest.mark.slow
 def test_stream_full_rebuild_replay_converges(spark, sf_dir, tmp_path):
     """Incremental full-document rebuild == batch build, and a FULL
     REPLAY of every delivery (fresh checkpoint, duplicate archive
