@@ -431,7 +431,7 @@ def bug_version_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bugzilla_etl_spark.operators.normalize import doc_id
 
     # instants as epoch longs + '|'-joined set: scalar, hash-portable
-    # output (parity rules in tools/verify_local.py docstring)
+    # output (parity rules: README "Correctness model")
     return docs.select(
         doc_id("user_id", "ts").alias("_id"),
         "user_id",

@@ -123,7 +123,7 @@ def read_store_or_empty(spark, path: str, schema: str):
 
 
 # ---------------------------------------------------------------------
-# Arrival-order hostility (tools/order_sweep.py)
+# Arrival-order hostility (``tools/gate.py order``)
 #
 # Production ingest is never event-time-ordered across partitions: a
 # Kafka topic's partitions drain at different rates, a landing bucket

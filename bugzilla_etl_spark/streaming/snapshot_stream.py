@@ -612,7 +612,7 @@ def stream_previous_values(events_stream: DataFrame) -> DataFrame:
 #
 # _pv_state/_sessionize_state document an IN-ORDER-per-entity delivery
 # contract — reasonable for a single ordered topic, false for real
-# multi-partition ingest (tools/order_sweep.py shows both diverging
+# multi-partition ingest (``tools/gate.py order`` shows both diverging
 # the moment bounded disorder appears).  The *_ooo forms retire the
 # assumption the way a production watermarked pipeline does: each
 # entity's state additionally carries a BUFFER of events newer than

@@ -327,20 +327,14 @@ def test_bench_alert_flags_a_crossing(tmp_path):
 # splits, AQE off) must produce identical canonical value rows.  A
 # result that depends on the partition plan is a latent flaky-gate
 # bug at any scale: it hashes green one run and red the next with
-# zero code change.  Full-catalog form: tools/determinism_sweep.py
-# (DETERMINISM_r10.json).  This slice keeps the bug-prone shapes
-# (top-k ties, float sums, hash sampling, window first/lag,
-# iterative convergence, sketch register merges) on every suite run.
+# zero code change.  Full-catalog form: tools/gate.py partitions.
+# This slice keeps the bug-prone shapes (top-k ties, float sums, hash
+# sampling, window first/lag, iterative convergence, sketch register
+# merges) on every suite run.
 
 
 def test_partition_plan_determinism_representative(spark, sf_dir):
-    import sys
-    from pathlib import Path
-
-    repo = Path(__file__).resolve().parent.parent
-    sys.path.insert(0, str(repo))
-    from tools.determinism_sweep import HOSTILE
-    from tools.verify_local import canon_frame
+    from tools.gate import canon_frame, hostile_conf
 
     names = [
         "topk_per_group",          # rank ties under LIMIT
@@ -359,41 +353,25 @@ def test_partition_plan_determinism_representative(spark, sf_dir):
         n: canon_frame(catalog.QUERIES[n](spark, sf_dir).toPandas())
         for n in names
     }
-    saved = {k: spark.conf.get(k, None) for k in HOSTILE}
-    for k, v in HOSTILE.items():
-        spark.conf.set(k, v)
-    try:
+    with hostile_conf(spark):
         for n in names:
             got = canon_frame(catalog.QUERIES[n](spark, sf_dir).toPandas())
             assert got == base[n], f"{n} is partition-plan dependent"
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 # ---------------------------------------------------------------------
 # null-hardened correctness — a deterministically-dirtied copy of the
 # testdata (1-in-7 payload NULLs per column, per-column de-correlated)
 # must still hash-match the DuckDB oracle.  Full-catalog form:
-# tools/null_sweep.py (NULL_SWEEP_r10.json).  This slice keeps one
-# query per fixed null-contract family on every suite run: kernel
-# null guards, signature-op drops, all-null set rendering, 3VL-safe
-# HOF equality, struct-carried as-of payloads, observed-only stats.
+# tools/gate.py null.  This slice keeps one query per fixed
+# null-contract family on every suite run: kernel null guards,
+# signature-op drops, all-null set rendering, 3VL-safe HOF equality,
+# struct-carried as-of payloads, observed-only stats.
 
 
 def test_null_hardened_representative(spark, tmp_path):
-    import sys
-    from pathlib import Path
-
-    import duckdb
-
-    repo = Path(__file__).resolve().parent.parent
-    sys.path.insert(0, str(repo))
-    from tools.null_sweep import TABLES, build_dirty_dir
-    from tools.verify_local import canon_frame
+    from tests.util import assert_oracle_slice
+    from tools.gate import build_dirty_dir
 
     names = [
         "doc_fingerprint",       # scalar metric: null in, null out
@@ -410,17 +388,6 @@ def test_null_hardened_representative(spark, tmp_path):
         "mm_resize",             # null payload: null bytes/checksum
         "embedding_outliers",    # null label = no cohort, row drops
     ]
-    dirty = str(tmp_path / "nullsf")
-    (tmp_path / "nullsf").mkdir()
+    dirty = str(tmp_path)
     build_dirty_dir("/root/testdata/sf0.001", dirty)
-
-    catalog.load_all()
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{dirty}/{t}.parquet'"
-        )
-    for n in names:
-        got = canon_frame(catalog.QUERIES[n](spark, dirty).toPandas())
-        want = canon_frame(con.execute(catalog.ORACLES[n]).df())
-        assert got == want, f"{n} diverges from oracle on null-injected data"
+    assert_oracle_slice(spark, dirty, names)

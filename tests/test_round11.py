@@ -26,6 +26,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from bugzilla_etl_spark.plans import catalog
+from tests.util import assert_oracle_slice
 
 
 def _q(name, spark, sf_dir):
@@ -43,7 +44,7 @@ def test_anomaly_mad_hist_null_screen_matches_exact(spark, tmp_path):
     n identical, no null-type cohort, and the hist output identical
     to running hist on the pre-screened corpus (the null rows must
     be invisible, not merely binned somewhere stable)."""
-    from tools.null_sweep import build_dirty_dir
+    from tools.gate import build_dirty_dir
 
     dirty = str(tmp_path / "nullsf")
     (tmp_path / "nullsf").mkdir()
@@ -77,26 +78,7 @@ def test_anomaly_mad_hist_null_screen_matches_exact(spark, tmp_path):
 # hostile-distribution slices: every suite pass re-proves a
 # representative query set oracle-green on unicode-decorated and
 # hot-key-skewed corpora (the full-catalog forms are
-# tools/unicode_sweep.py and tools/skew_sweep.py, committed as
-# UNICODE_SWEEP_rN / SKEW_SWEEP_rN artifacts)
-
-
-def _oracle_slice(spark, sf_dir, names):
-    import duckdb
-
-    from tools.null_sweep import TABLES
-    from tools.verify_local import canon_frame
-
-    catalog.load_all()
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
-    for n in names:
-        got = canon_frame(catalog.QUERIES[n](spark, sf_dir).toPandas())
-        want = canon_frame(con.execute(catalog.ORACLES[n]).df())
-        assert got == want, f"{n} diverges from oracle on {sf_dir}"
+# ``tools/gate.py unicode`` and ``tools/gate.py skew``)
 
 
 def test_unicode_hardened_representative(spark, tmp_path):
@@ -104,12 +86,12 @@ def test_unicode_hardened_representative(spark, tmp_path):
     multi-byte corpora: byte-vs-codepoint length units, regex word
     classes over CJK/emoji, case mapping through lower(), and hash
     inputs taken over the same normalized bytes on both engines."""
-    from tools.unicode_sweep import build_decorated_dir
+    from tools.gate import build_decorated_dir
 
     deco = str(tmp_path / "unisf")
     (tmp_path / "unisf").mkdir()
     build_decorated_dir("/root/testdata/sf0.001", deco)
-    _oracle_slice(
+    assert_oracle_slice(
         spark,
         deco,
         [
@@ -132,12 +114,12 @@ def test_skew_hardened_representative(spark, tmp_path):
     oracle when 30-50% of rows pile onto one hot key — anything that
     samples per partition, caps a per-key structure by frequency
     assumptions, or short-circuits on uniformity diverges here."""
-    from tools.skew_sweep import build_skewed_dir
+    from tools.gate import build_skewed_dir
 
     deco = str(tmp_path / "skewsf")
     (tmp_path / "skewsf").mkdir()
     build_skewed_dir("/root/testdata/sf0.001", deco)
-    _oracle_slice(
+    assert_oracle_slice(
         spark,
         deco,
         [
@@ -536,7 +518,7 @@ def dense_dir(tmp_path_factory):
     produces REAL per-entity cross-batch inversions (on the raw
     30-day testdata per-user gaps dwarf the 90-min margin and
     in-order-assuming operators pass by sparsity)."""
-    from tools.order_sweep import build_dense_dir
+    from tools.gate import build_dense_dir
 
     d = str(tmp_path_factory.mktemp("dense"))
     build_dense_dir("/root/testdata/sf0.001", d)

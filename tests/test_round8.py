@@ -325,25 +325,13 @@ def test_catalog_survives_empty_tables(spark, sf_dir, tmp_path):
     that failed the first full-catalog empty sweep (driver-model
     stacks, foreachBatch stores never created, min/max None
     arithmetic, Laplace V=0) plus one representative per family;
-    the FULL 156-query sweep was run and is clean — this guards the
-    classes that broke."""
-    import glob
-    import shutil
-
+    the full-catalog form is ``tools/gate.py empty`` — this guards
+    the classes that broke."""
     from bugzilla_etl_spark import tmpdirs
+    from tools.gate import build_empty_dir
 
-    empty = str(tmp_path / "empty_sf")
-    (tmp_path / "empty_sf").mkdir()
-    tables = (
-        "region nation customer supplier part orders lineitem"
-        " events documents embeddings"
-    ).split()
-    for t in tables:
-        df = spark.read.parquet(f"{sf_dir}/{t}.parquet").limit(0)
-        stage = str(tmp_path / f"stage_{t}")
-        df.coalesce(1).write.mode("overwrite").parquet(stage)
-        src = glob.glob(f"{stage}/*.parquet")[0]
-        shutil.copy(src, f"{empty}/{t}.parquet")
+    empty = str(tmp_path)
+    build_empty_dir(spark, sf_dir, empty)
 
     names = [
         # the first-sweep failure set

@@ -1,4 +1,4 @@
-"""Regression tests for the local-gate canonicalizer.
+"""Regression tests for the correctness gate's canonicalizer.
 
 Round-3 post-mortem: three driver rows (events_sessionize,
 stream_sessionize, pivot_event_counts) were red at the driver but
@@ -14,33 +14,31 @@ integer-typed Spark result.
 
 from __future__ import annotations
 
+import datetime
+
 import duckdb
 import numpy as np
 import pandas as pd
 
-from tests import util
-from tools.verify_local import _canon_cell, canon_frame
+from tools.gate import canon_cell, canon_frame
 
 
 def test_float_int_cells_are_distinct():
-    assert _canon_cell(1.0) != _canon_cell(1)
-    assert _canon_cell(np.float64(1.0)) != _canon_cell(np.int64(1))
-    assert _canon_cell(0.0) != _canon_cell(0)
-    assert _canon_cell(-3.0) != _canon_cell(-3)
+    assert canon_cell(1.0) != canon_cell(1)
+    assert canon_cell(np.float64(1.0)) != canon_cell(np.int64(1))
+    assert canon_cell(0.0) != canon_cell(0)
+    assert canon_cell(-3.0) != canon_cell(-3)
     # genuine fractions / exponent forms still canonical
-    assert _canon_cell(1.5) == "1.5"
-    assert _canon_cell(1e30) == "1e+30"
-    assert _canon_cell(float("nan")) == "nan"
-    assert _canon_cell(float("inf")) == "inf"
-    assert _canon_cell(float("-inf")) == "-inf"
-    assert util.canon(float("inf")) == "inf"
-    assert util.canon(float("-inf")) == "-inf"
-
-
-def test_util_canon_matches_verify_local_policy():
-    assert util.canon(1.0) != util.canon(1)
-    assert util.canon(0.0) != util.canon(0)
-    assert util.canon(2.5) == "2.5"
+    assert canon_cell(1.5) == "1.5"
+    assert canon_cell(1e30) == "1e+30"
+    assert canon_cell(float("nan")) == "nan"
+    assert canon_cell(float("inf")) == "inf"
+    assert canon_cell(float("-inf")) == "-inf"
+    assert canon_cell(2.5) == "2.5"
+    # collect() datetimes and toPandas() Timestamps canonicalize alike
+    ts = datetime.datetime(2024, 1, 2, 3, 4, 5, 6)
+    assert canon_cell(ts) == canon_cell(pd.Timestamp(ts))
+    assert canon_cell(ts) == "2024-01-02T03:04:05.000006"
 
 
 def test_hugeint_oracle_fails_against_int_spark_result():

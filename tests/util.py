@@ -1,46 +1,19 @@
-"""Order-insensitive Spark-vs-DuckDB comparison used across tests.
+"""Order-insensitive Spark-vs-DuckDB comparisons used across tests.
 
-Same canonicalization as tools/verify_local.py: columns sorted by
-name, rows sorted by stringified tuple, floats to 6 significant
-digits, timestamps to ISO-micros.
+Cells go through the correctness gate's canonicalizer
+(``tools.gate.canon_cell``); rows come from ``collect()`` and
+``fetchall()``, columns sorted by name, rows sorted by canonical string.
 """
 
 from __future__ import annotations
 
-import datetime
-import math
-
-
-def canon(v):
-    if v is None:
-        return "∅"
-    if isinstance(v, bool):
-        return str(int(v))
-    if isinstance(v, float):
-        # Type-distinct like the driver: float 1.0 must NOT canonicalize
-        # to the same string as int 1 (see tools/verify_local.py).
-        if math.isnan(v):
-            return "nan"
-        if math.isinf(v):
-            return "inf" if v > 0 else "-inf"
-        if v == 0:
-            return "0.0"
-        s = f"{v:.6g}"
-        if "." not in s and "e" not in s:
-            s += ".0"
-        return s
-    if isinstance(v, datetime.datetime):
-        return v.strftime("%Y-%m-%dT%H:%M:%S.%f")
-    if isinstance(v, (list, tuple)):
-        return "[" + ",".join(canon(x) for x in v) + "]"
-    if isinstance(v, bytes):
-        return v.hex()
-    return str(v)
+from bugzilla_etl_spark.plans import catalog
+from tools import gate
 
 
 def canon_rows(cols, rows):
     order = sorted(range(len(cols)), key=lambda i: cols[i])
-    out = ["|".join(canon(r[i]) for i in order) for r in rows]
+    out = ["|".join(gate.canon_cell(r[i]) for i in order) for r in rows]
     out.sort()
     return out
 
@@ -56,3 +29,13 @@ def assert_same(sdf, duck_con, sql: str):
     assert a == b, next(
         f"row {i}:\n spark={x}\n duck ={y}" for i, (x, y) in enumerate(zip(a, b)) if x != y
     )
+
+
+def assert_oracle_slice(spark, sf_dir, names):
+    """Each named query value-equal to its oracle over ``sf_dir``,
+    through the gate's driver-shaped per-query compare."""
+    catalog.load_all()
+    con = gate.duck(sf_dir)
+    for n in names:
+        rec = gate.check_oracle(spark, con, n, sf_dir)
+        assert rec["status"] == "pass", f"{n} diverges from oracle on {sf_dir}: {rec['detail']}"

@@ -1,78 +1,41 @@
-"""Hot-key skew sweep: correctness AND straggler cost under a skewed
-key distribution.
+"""Hot-key skew straggler probe: what a skewed key distribution costs.
 
-Real corpora are Zipfian; the uniform generator testdata is the one
-distribution a 100 TB cluster will never see.  Skew breaks pipelines
-two ways, and this tool probes both:
-
-1. CORRECTNESS — a query whose result depends on the key
-   distribution only through the VALUES (all of ours should) must
-   stay oracle-green when 30-50% of rows pile onto one hot key.
-   Anything that samples per partition, caps a per-key structure, or
-   short-circuits on "keys are about this frequent" diverges here.
-   The full Spark-vs-DuckDB gate (tools/verify_local) runs over a
-   deterministically-skewed copy of the testdata — both engines see
-   the same skewed parquet, so value parity is still exact.
-2. STRAGGLER COST — per-entity windows and key-partitioned aggs
-   serialize on the hot key: one task owns 30% of the corpus while
-   31 idle.  The probe times a skew-sensitive query set on the
-   uniform vs the skewed copy (same row count, same schema — ONLY
-   the key distribution moved) and reports the ratio.  local[n]
-   understates a 1000-executor cluster's pain (the straggler here
-   still shares cache with its siblings), but a ratio ≫ 1 at n=32
-   is the smoke of the fire, and the salted forms (`set_final_salted`
-   vs `set_final`) should show the mitigation paying for itself.
-
-Skew injection (DuckDB rewrite, deterministic by id hash; keys are
-remapped to an EXISTING value so FKs stay valid and no engine sees
-an id it couldn't have seen before):
-
-- ``events.user_id``   → min user_id   for 30% of rows (by event_id)
-- ``documents.source`` → 'src0'        for 50% of rows (by doc_id)
-- ``orders.o_custkey`` → min custkey   for 30% of rows (by o_orderkey)
-- ``lineitem.l_suppkey`` → min suppkey for 30% of rows (by l_orderkey)
+Per-entity windows and key-partitioned aggs serialize on a hot key:
+one task owns 30% of the corpus while the rest idle.  The probe times
+a skew-sensitive query set on a uniform vs a skewed copy of the same
+data (same row count, same schema, same writer — ONLY the key
+distribution moved; see ``tools.gate.build_skewed_dir``) and reports
+the ratio.  local[n] understates a 1000-executor cluster's pain (the
+straggler here still shares cache with its siblings), but a ratio ≫ 1
+is the smoke of the fire, and the salted forms (`set_final_salted` vs
+`set_final`) should show the mitigation paying for itself.  Value
+parity on skewed data is the correctness gate's job
+(``tools/gate.py skew``).
 
 Usage:
   python tools/skew_sweep.py [--json OUT.json] [--factor N]
-                             [correctness_sf_dir] [perf_sf_dir]
-                             [query ...]
-Defaults: correctness at sf0.001 (full catalog), perf at sf0.1 over
-SKEW_QUERIES, min-of-2 per side.  ``--factor N`` replicates the perf
-dir N× first (scaleprobe's disjoint-id protocol) and skews the
-REPLICATED corpus — at sf0.1 alone the hot key owns ~30k rows and
-every straggler is sub-second, so ratios read ≈1 regardless of plan
-shape (measured, r11); one decade up the hot key owns ~300k rows
-and a serialized window actually registers.
+                             [--hot-share S] [perf_sf_dir] [query ...]
+Defaults: perf at sf0.1 over SKEW_QUERIES, min-of-2 per side.
+``--factor N`` replicates the perf dir N× first (scaleprobe's
+disjoint-id protocol) and skews the REPLICATED corpus — at sf0.1
+alone the hot key owns ~30k rows and every straggler is sub-second,
+so ratios read ≈1 regardless of plan shape (measured, r11); one
+decade up the hot key owns ~300k rows and a serialized window
+actually registers.  ``--hot-share S`` pushes the hot key's share of
+rows to S (0.1% resolution) for crossover probes.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import shutil
-import subprocess
 import sys
-import tempfile
 import time
-
-import duckdb
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-TABLES = (
-    "region nation customer supplier part orders lineitem"
-    " events documents embeddings"
-).split()
-
-# (id column driving the deterministic bucket, key column remapped,
-#  hot-value SQL, bucket modulus, hot-bucket count)
-SKEW = {
-    "events": ("event_id", "user_id", "min(user_id)", 10, 3),
-    "documents": ("doc_id", "source", "'src0'", 2, 1),
-    "orders": ("o_orderkey", "o_custkey", "min(o_custkey)", 10, 3),
-    "lineitem": ("l_orderkey", "l_suppkey", "min(l_suppkey)", 10, 3),
-}
+from tools.gate import build_skewed_dir  # noqa: E402
 
 # The straggler-sensitive set: per-entity windows (sessionize /
 # as-of / running sets), key-grouped aggs and joins on the skewed
@@ -96,80 +59,6 @@ SKEW_QUERIES = [
     "quality_repetition",
     "key_skew_stats",
 ]
-
-
-# Small row groups so a single-file rewrite still splits into many
-# scan tasks — DuckDB's 122,880-row default makes a 50k-row table
-# ONE row group, i.e. ONE Spark input split, and the first probe run
-# misread that serialization as a 4.5× "skew" penalty on a query
-# with no key-grouped stage at all.
-_ROW_GROUP = 16384
-
-
-def build_skewed_dir(
-    src: str, dst: str, skew: bool = True, hot_share: float | None = None
-) -> None:
-    """Rewrite ``src`` into ``dst`` through one writer; with
-    ``skew=True`` remap the SKEW keys, with ``skew=False`` copy
-    values unchanged.  The perf probe compares a skew=False rewrite
-    against a skew=True rewrite so BOTH sides share file count, row
-    groups, and compression — the key distribution is the only
-    variable (comparing against the original Spark-written layout
-    confounds skew with scan-split geometry)."""
-    con = duckdb.connect()
-    for t in TABLES:
-        src_file = f"{src}/{t}.parquet"
-        dst_file = f"{dst}/{t}.parquet"
-        if os.path.isdir(src_file):
-            # Spark-written table (a directory of part files): read
-            # via glob; the rewrite lands as one file, which both
-            # engines read through the same path downstream
-            src_file = f"{src}/{t}.parquet/*.parquet"
-        if t not in SKEW or not skew:
-            if "*" in src_file or t in SKEW:
-                con.execute(
-                    f"COPY (SELECT * FROM '{src_file}') TO '{dst_file}'"
-                    f" (FORMAT PARQUET, ROW_GROUP_SIZE {_ROW_GROUP})"
-                )
-            else:
-                shutil.copyfile(src_file, dst_file)
-            continue
-        id_col, key_col, hot_sql, mod, nhot = SKEW[t]
-        if hot_share is not None:
-            # crossover-probe mode (round-11 verdict task 3): push the
-            # hot key's share beyond the standing 30/50% so the
-            # classic per-key-ordered forms actually straggle at
-            # local[32]; 1000 buckets give 0.1% share resolution
-            mod, nhot = 1000, max(1, min(999, round(hot_share * 1000)))
-        hot = con.execute(
-            f"SELECT {hot_sql} FROM '{src_file}'"
-        ).fetchone()[0]
-        hot_lit = f"'{hot}'" if isinstance(hot, str) else str(hot)
-        cols = [
-            r[0]
-            for r in con.execute(
-                f"DESCRIBE SELECT * FROM '{src_file}'"
-            ).fetchall()
-        ]
-        proj = ", ".join(
-            f"CASE WHEN hash({id_col}) % {mod} < {nhot}"
-            f" THEN {hot_lit} ELSE {c} END AS {c}"
-            if c == key_col
-            else c
-            for c in cols
-        )
-        con.execute(
-            f"COPY (SELECT {proj} FROM '{src_file}') TO '{dst_file}'"
-            f" (FORMAT PARQUET, ROW_GROUP_SIZE {_ROW_GROUP})"
-        )
-        # row count preserved: skew moves keys, never rows
-        n_src = con.execute(
-            f"SELECT count(*) FROM '{src_file}'"
-        ).fetchone()[0]
-        n_dst = con.execute(
-            f"SELECT count(*) FROM '{dst_file}'"
-        ).fetchone()[0]
-        assert n_src == n_dst, (t, n_src, n_dst)
 
 
 def perf_probe(
@@ -239,82 +128,26 @@ def perf_probe(
     return out
 
 
-class _SkipCorrectness(Exception):
-    pass
-
-
 def main() -> None:
     args = sys.argv[1:]
     json_out = None
     factor = 1
     hot_share = None
-    skip_corr = False
-    while args and args[0] in (
-        "--json", "--factor", "--hot-share", "--skip-correctness"
-    ):
+    while args and args[0] in ("--json", "--factor", "--hot-share"):
         if args[0] == "--json":
             json_out = args[1]
-            args = args[2:]
         elif args[0] == "--factor":
             factor = int(args[1])
-            args = args[2:]
-        elif args[0] == "--hot-share":
-            hot_share = float(args[1])
-            args = args[2:]
         else:
-            # focused perf probes: the correctness half is the slow
-            # full-catalog gate — skip ONLY when a same-code run
-            # already recorded it (the artifact says so explicitly)
-            skip_corr = True
-            args = args[1:]
-    corr_src = args[0] if args else "/root/testdata/sf0.001"
-    perf_src = args[1] if len(args) > 1 else "/root/testdata/sf0.1"
-    queries = args[2:] or SKEW_QUERIES
+            hot_share = float(args[1])
+        args = args[2:]
+    perf_src = args[0] if args else "/root/testdata/sf0.1"
+    queries = args[1:] or SKEW_QUERIES
 
-    # --- correctness half: full catalog vs oracle on skewed data
-    correctness_rc = 0
-    corr: dict = {}
-    deco = tempfile.mkdtemp(prefix="bes_skewsf_")
-    try:
-        if skip_corr:
-            raise _SkipCorrectness
-        build_skewed_dir(corr_src, deco)
-        print(
-            f"skewed copy of {corr_src} at {deco};"
-            " running verify_local ...",
-            file=sys.stderr,
-        )
-        corr_json = tempfile.mktemp(suffix=".json")
-        r = subprocess.run(
-            [
-                sys.executable,
-                "tools/verify_local.py",
-                "--json",
-                corr_json,
-                deco,
-            ],
-            cwd=REPO,
-        )
-        correctness_rc = r.returncode
-        with open(corr_json) as f:
-            corr = json.load(f)
-        os.unlink(corr_json)
-    except _SkipCorrectness:
-        pass
-    finally:
-        shutil.rmtree(deco, ignore_errors=True)
-
-    # --- straggler half: uniform vs skewed timing at perf SF
     probe = perf_probe(
         perf_src, queries, factor=factor, hot_share=hot_share
     )
-
     result = {
-        "correctness_sf": corr_src,
-        "correctness_pass": (
-            "skipped" if skip_corr else correctness_rc == 0
-        ),
-        "correctness_n": len(corr),
         "perf_sf": perf_src,
         "perf_factor": factor,
         "hot_share": hot_share,
@@ -325,7 +158,6 @@ def main() -> None:
     if json_out:
         with open(json_out, "w") as f:
             f.write(line + "\n")
-    sys.exit(correctness_rc)
 
 
 if __name__ == "__main__":
