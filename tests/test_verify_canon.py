@@ -20,6 +20,7 @@ import duckdb
 import numpy as np
 import pandas as pd
 
+from tests import util
 from tools.gate import canon_cell, canon_frame
 
 
@@ -39,6 +40,14 @@ def test_float_int_cells_are_distinct():
     ts = datetime.datetime(2024, 1, 2, 3, 4, 5, 6)
     assert canon_cell(ts) == canon_cell(pd.Timestamp(ts))
     assert canon_cell(ts) == "2024-01-02T03:04:05.000006"
+
+
+def test_util_canon_matches_verify_local_policy():
+    """The tests' collect()-path rows follow the gate's policy."""
+    assert util.canon_rows(["a"], [(1.0,)]) != util.canon_rows(["a"], [(1,)])
+    assert util.canon_rows(["a"], [(0.0,)]) != util.canon_rows(["a"], [(0,)])
+    assert util.canon_rows(["a"], [(2.5,)]) == ["2.5"]
+    assert util.canon_rows(["b", "a"], [(1, 2.5)]) == ["2.5|1"]
 
 
 def test_hugeint_oracle_fails_against_int_spark_result():
