@@ -234,16 +234,6 @@ def _family(name: str) -> str:
 # doing — min-of-n is self-denoising.
 N_RUNS = 3
 
-# Queries whose operator records a wall-clock split (landing write
-# vs layout validation vs block walk, operators/backfill.LAST_SPLIT).
-# The split of each query's WINNING (min) pass is embedded in the
-# output line: the round-12 driver-lane alert on
-# full_backfill_clustered (27.9 s vs a 9.2 s pin while the builder's
-# quiet host read 7.5 s on identical code) was only attributable to
-# "probably the partitionBy landing under IO contention"; with the
-# split recorded, a crossing localizes itself.
-SPLIT_QUERIES = {"full_backfill_clustered", "full_backfill_resume"}
-
 
 def _io_probe_mb_s(mb: int = 32) -> float:
     """Sequential write+fsync throughput of the scratch volume the
@@ -276,8 +266,6 @@ def main() -> None:
 
     from bugzilla_etl_spark.session import get_spark
     from bugzilla_etl_spark.plans import catalog
-    from bugzilla_etl_spark.operators import backfill as _backfill
-    from bugzilla_etl_spark import tmpdirs as _tmpdirs
 
     catalog.load_all()
     spark = get_spark("bench")
@@ -292,57 +280,42 @@ def main() -> None:
     medians: dict[str, float] = {}
     splits: dict[str, dict[str, float]] = {}
     for name in HEADLINE:
-        fn = catalog.QUERIES.get(name)
-        if fn is None:
+        if name not in catalog.QUERIES:
             continue
         # one untimed warmup run per query: reported numbers are
         # steady-state throughput (codegen compiled, buffers warm),
         # which is the apples-to-apples basis against the reference's
-        # long-running single-node ETL loop
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        # Release scratch/caches BETWEEN passes too, not only between
-        # queries (measurement-hygiene fix, r17, disclosed in
-        # OPTIMIZATION_r17.md): the r17 nonce guards make every
-        # invocation materialize its OWN cache entry, so warmup + 3
-        # timed passes otherwise hold up to 4 live copies of each
-        # pinned frame — memory pressure + MEMORY_AND_DISK spill that
+        # long-running single-node ETL loop.  Each pass is its own
+        # run, released after its clock stops: per pass, not per
+        # query (r17, OPTIMIZATION_r17.md) — the nonce guards make
+        # every invocation materialize its OWN cache entry, so warmup
+        # + 3 timed passes otherwise hold up to 4 live copies of each
+        # pinned frame, memory pressure + MEMORY_AND_DISK spill that
         # belongs to the harness, not the query (r17 first lane:
         # previous_values_paned median 16.9 s vs 6.2 s min from
-        # exactly this).  Runs OUTSIDE the timed region; the nonce
-        # already guarantees no pass can read an earlier pass's
-        # cache, so this only drops memory, never changes what a
-        # timed pass computes (streambench has done the same since
-        # r16).
-        _tmpdirs.gc_now()
+        # exactly this).  The release only drops memory, never
+        # changes what a timed pass computes.
+        catalog.noop_pass(name, spark, sf_dir)
         runs: list[float] = []
         best_split: dict[str, float] | None = None
         for _ in range(N_RUNS):
-            if name in SPLIT_QUERIES:
-                _backfill.reset_split()
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            dt = time.perf_counter() - t0
-            if name in SPLIT_QUERIES and (not runs or dt < min(runs)):
-                best_split = dict(_backfill.LAST_SPLIT)
-                best_split["pass_total_sec"] = round(dt, 3)
+            dt, stats = catalog.noop_pass(name, spark, sf_dir)
+            # an operator that records a wall split (the backfill
+            # entries: landing write vs layout validation vs block
+            # walk) gets its WINNING pass's split embedded: the
+            # round-12 bench-lane alert on full_backfill_clustered
+            # (27.9 s vs a 9.2 s pin while the builder's quiet host
+            # read 7.5 s on identical code) was only attributable to
+            # "probably the partitionBy landing under IO contention";
+            # with the split recorded, a crossing localizes itself
+            if "split" in stats and (not runs or dt < min(runs)):
+                best_split = {**stats["split"], "pass_total_sec": round(dt, 3)}
             runs.append(dt)
-            _tmpdirs.gc_now()
         runs.sort()
         timings[name] = round(runs[0], 3)
         medians[name] = round(runs[len(runs) // 2], 3)
         if best_split:
             splits[name] = best_split
-        # Release the query's tracked scratch dirs and registered
-        # cache handles before moving on (the registry tests call
-        # this between invocations for the same reason): without it
-        # the 140-query sweep ACCUMULATES every knob-requested
-        # persist and landing dir until process exit — executor
-        # memory pressure and /tmp growth that taxes the tail of the
-        # suite and isn't part of any single query's cost.  Runs
-        # OUTSIDE the timed region; every timed pass still computes
-        # from the parquet inputs (this only DROPS caches, never
-        # warms them).
-        _tmpdirs.gc_now()
 
     io_probe_end = _io_probe_mb_s()
 

@@ -110,7 +110,10 @@ def canonical_closure(mapping: DataFrame, max_iter: int = 8) -> DataFrame:
             # nothing lands in the CacheManager — a repeated invocation
             # cannot silently read this one's cache (the r16 bench-
             # contamination class).  Old round RDDs are released by the
-            # ContextCleaner when their reference drops.  Lazy
+            # ContextCleaner when their reference drops.  The trade:
+            # checkpointed blocks cannot be recomputed from lineage, so
+            # on a cluster losing an executor mid-query fails the job
+            # instead of recomputing the lost round.  Lazy
             # (eager=False): the fixpoint check below scans every
             # partition of ``stepped``, so the checkpoint materializes
             # inside that same action — one action per round, exactly

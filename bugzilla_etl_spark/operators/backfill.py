@@ -49,25 +49,17 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# Wall-clock split of the last backfill run, accumulated across the
-# operator calls an entry makes (landing write vs layout validation
-# vs block walk).  bench.py resets this before each timed pass and
-# embeds the snapshot of the winning pass in its JSON line, so the
+# The operators record a wall-clock split into the current run's
+# stats (tmpdirs.add_split), summed across the calls an entry makes:
+# landing write vs layout validation vs block walk.  bench.py embeds
+# the split of each query's winning pass in its JSON line, so the
 # recorded BENCH artifact itself says WHERE the time went — the
 # round-12 driver-lane alert on full_backfill_clustered (27.9 s vs
 # a 9.2 s pin, builder quiet-host 7.5 s on identical code) could
 # only be attributed to "probably the partitionBy landing under IO
 # contention"; with the split recorded, the next crossing is a
 # diagnosis, not a hypothesis.
-LAST_SPLIT: dict[str, float] = {}
-
-
-def reset_split() -> None:
-    LAST_SPLIT.clear()
-
-
-def _add_split(key: str, sec: float) -> None:
-    LAST_SPLIT[key] = round(LAST_SPLIT.get(key, 0.0) + sec, 3)
+from bugzilla_etl_spark.tmpdirs import add_split
 
 
 def block_plan(end: int, increment: int) -> list[tuple[int, int]]:
@@ -161,7 +153,7 @@ def land_clustered(
     )
     with open(os.path.join(out_dir, "_layout.json"), "w") as f:
         json.dump({"increment": increment, "entity": entity}, f)
-    _add_split("landing_write_sec", time.perf_counter() - t0)
+    add_split("landing_write_sec", time.perf_counter() - t0)
 
 
 def read_block(
@@ -333,7 +325,7 @@ def run_backfill(
         clustered_los = validate_clustered_layout(
             clustered_dir, increment, entity, spark=spark
         )
-        _add_split("validate_sec", time.perf_counter() - t0)
+        add_split("validate_sec", time.perf_counter() - t0)
     done: list[tuple[int, int]] = []
     t_walk = time.perf_counter()
 
@@ -402,8 +394,8 @@ def run_backfill(
             done.append((lo, hi))
             if crash_after is not None and len(done) >= crash_after:
                 break
-    _add_split("walk_sec", time.perf_counter() - t_walk)
-    _add_split("blocks_walked", float(len(done)))
+    add_split("walk_sec", time.perf_counter() - t_walk)
+    add_split("blocks_walked", float(len(done)))
     return done
 
 

@@ -592,7 +592,9 @@ def neardup_components(
     # quadratic recompute), and nothing lands in the CacheManager, so
     # a repeated invocation computes cold instead of silently reading
     # this one's cache (the r16 contamination class).  Old round RDDs
-    # release via the ContextCleaner when their reference drops.
+    # release via the ContextCleaner when their reference drops.  The
+    # trade: checkpointed blocks cannot be recomputed from lineage, so
+    # on a cluster losing an executor mid-query fails the job.
     edges = (
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .unionByName(

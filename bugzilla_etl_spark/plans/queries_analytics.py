@@ -18,10 +18,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
-from bugzilla_etl_spark.plans.catalog import register
+from bugzilla_etl_spark.plans.catalog import PARALLELISM_FIRST, register
 from bugzilla_etl_spark.sources import load_table
 from bugzilla_etl_spark.sources.derived import PARTSUPP_CTE, partsupp
+from bugzilla_etl_spark.tmpdirs import pin
 
 # Wall-clock cutoffs: orders/lineitem timestamps are parquet ms-precision,
 # which Spark 4 reads as TIMESTAMP_NTZ — compare against NTZ literals
@@ -1753,21 +1755,10 @@ def pagerank_trade(
         )
     )
     if persist_edges:
-        import uuid
-
-        from bugzilla_etl_spark.tmpdirs import register_cleanup
-
-        # nonce: defeat cross-invocation CacheManager plan-matching
-        # so repeated bench/probe passes measure a cold build, not
-        # the previous invocation's cache (see triangle_count_scaled)
-        edges = edges.withColumn(
-            "_pe_nonce", F.lit(uuid.uuid4().hex)
-        ).persist()
-        # CacheManager entries are plan-keyed, never GC'd: release
-        # with the same registry that collects scratch dirs, or
-        # repeated knob invocations accumulate cached edge lists
-        register_cleanup(edges.unpersist)
-        edges = edges.drop("_pe_nonce")
+        # pinned per invocation (tmpdirs.pin): repeated bench/probe
+        # passes measure a cold build, and the cache is released with
+        # the run instead of accumulating across knob invocations
+        edges = pin(edges, StorageLevel.MEMORY_AND_DISK_DESER)
     outdeg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
     nodes = edges.select("src").distinct().withColumnRenamed(
         "src", "node"
@@ -1818,6 +1809,7 @@ def pagerank_trade(
 
 @register(
     "triangle_count",
+    conf={PARALLELISM_FIRST: "false"},
     oracle="""
     WITH ps AS (
         SELECT DISTINCT l_partkey AS pk, l_suppkey AS sk FROM lineitem
@@ -1925,29 +1917,13 @@ def triangle_count(
     subtree reuse entirely; the executor-side persist keeps the
     rows distributed and the joins broadcasting from measured
     sizes.)"""
-    from bugzilla_etl_spark.tmpdirs import size_partitions_from_data
-
-    # r16 anti-scaler (driver c8 < c32): bounded intermediate frames
-    # must partition by DATA SIZE, not core count — scoped AQE knob,
-    # restored via the cleanup registry (see tmpdirs.scoped_conf).
-    size_partitions_from_data(spark)
-    import uuid
-
-    from bugzilla_etl_spark.tmpdirs import register_cleanup
-
     li = load_table(spark, sf_dir, "lineitem")
-    ps = (
+    ps = pin(
         li.select(
             F.col("l_partkey").alias("pk"), F.col("l_suppkey").alias("sk")
-        )
-        .distinct()
-        # nonce: defeat cross-invocation CacheManager plan-matching
-        # (see triangle_count_scaled below)
-        .withColumn("_nonce", F.lit(uuid.uuid4().hex))
-        .persist()
+        ).distinct(),
+        StorageLevel.MEMORY_AND_DISK_DESER,
     )
-    register_cleanup(ps.unpersist)
-    ps = ps.drop("_nonce")
     ok = ps.groupBy("pk").agg(F.count(F.lit(1)).alias("ns")).where(
         F.col("ns") <= 64
     ).select("pk")
@@ -1961,15 +1937,12 @@ def triangle_count(
         )
         .agg(F.count(F.lit(1)).alias("w"))
     )
-    edges = (
+    edges = pin(
         co.orderBy(F.col("w").desc(), F.col("s1").asc(), F.col("s2").asc())
         .limit(backbone)
-        .select("s1", "s2")
-        .withColumn("_nonce", F.lit(uuid.uuid4().hex))
-        .persist()
+        .select("s1", "s2"),
+        StorageLevel.MEMORY_AND_DISK_DESER,
     )
-    register_cleanup(edges.unpersist)
-    edges = edges.drop("_nonce")
     e1 = edges.alias("e1")
     e2 = edges.alias("e2")
     wedges = e1.join(e2, F.col("e1.s2") == F.col("e2.s1")).select(
@@ -2059,7 +2032,11 @@ def _tri_scaled_oracle(frac_bp: int = 100, min_cap: int = 500) -> str:
     """
 
 
-@register("triangle_count_scaled", oracle=_tri_scaled_oracle())
+@register(
+    "triangle_count_scaled",
+    oracle=_tri_scaled_oracle(),
+    conf={PARALLELISM_FIRST: "false"},
+)
 def triangle_count_scaled(
     spark: SparkSession,
     sf_dir: str,
@@ -2102,16 +2079,6 @@ def triangle_count_scaled(
     discipline are #112's verbatim; the backbone stays broadcast-
     able by construction at the default frac (caller-scaled beyond
     that, documented trade in SCALING.md)."""
-    from bugzilla_etl_spark.tmpdirs import size_partitions_from_data
-
-    # r16 anti-scaler (driver c8 < c32): bounded intermediate frames
-    # must partition by DATA SIZE, not core count — scoped AQE knob,
-    # restored via the cleanup registry (see tmpdirs.scoped_conf).
-    size_partitions_from_data(spark)
-    from bugzilla_etl_spark.tmpdirs import register_cleanup
-
-    import uuid
-
     li = load_table(spark, sf_dir, "lineitem")
     # The distinct (pk, sk) projection feeds THREE consumers (pair
     # sides a/b and the df-cap aggregate): un-pinned, ReuseExchange
@@ -2119,22 +2086,26 @@ def triangle_count_scaled(
     # distinct shuffle (r16 plan audit: 2 parquet scans, 2 distinct
     # exchanges).  Pinning the skinny two-long frame (nonce: see the
     # co comment below) makes all three read one materialization.
-    ps = (
+    ps = pin(
         li.select(
             F.col("l_partkey").alias("pk"), F.col("l_suppkey").alias("sk")
-        )
-        .distinct()
-        .withColumn("_nonce", F.lit(uuid.uuid4().hex))
-        .persist()
+        ).distinct(),
+        StorageLevel.MEMORY_AND_DISK_DESER,
     )
-    register_cleanup(ps.unpersist)
-    ps = ps.drop("_nonce")
     ok = ps.groupBy("pk").agg(F.count(F.lit(1)).alias("ns")).where(
         F.col("ns") <= 64
     ).select("pk")
     a = ps.alias("a")
     b = ps.alias("b")
-    co = (
+    # pin's per-invocation nonce: Spark's CacheManager matches
+    # persisted plans STRUCTURALLY, so without it a second
+    # invocation's identical plan silently reads the first's cache —
+    # bench/probe passes then measure a warm cache, not the query
+    # (the r14 tri_decade first cut read a 0.03 exponent that way).
+    # The nonce keeps reuse within ONE invocation (pay the edge
+    # aggregate once) and makes every cross-invocation pass honestly
+    # cold.
+    co = pin(
         a.join(
             b,
             (F.col("a.pk") == F.col("b.pk"))
@@ -2142,20 +2113,9 @@ def triangle_count_scaled(
         )
         .join(ok, on="pk")
         .groupBy(F.col("a.sk").alias("s1"), F.col("b.sk").alias("s2"))
-        .agg(F.count(F.lit(1)).alias("w"))
-        # per-invocation nonce literal: Spark's CacheManager matches
-        # persisted plans STRUCTURALLY, so without it a second
-        # invocation's identical plan silently reads the first's
-        # cache — bench/probe passes then measure a warm cache, not
-        # the query (the r14 tri_decade first cut read a 0.03
-        # exponent that way).  The nonce keeps reuse within ONE
-        # invocation (pay the edge aggregate once) and makes every
-        # cross-invocation pass honestly cold.
-        .withColumn("_nonce", F.lit(uuid.uuid4().hex))
-        .persist()
+        .agg(F.count(F.lit(1)).alias("w")),
+        StorageLevel.MEMORY_AND_DISK_DESER,
     )
-    register_cleanup(co.unpersist)
-    co = co.drop("_nonce")
     hist = sorted(
         co.groupBy("w").agg(F.count(F.lit(1)).alias("c")).collect(),
         key=lambda r: -r.w,
@@ -2199,11 +2159,7 @@ def triangle_count_scaled(
         # and the joins still broadcast from measured sizes.  (The
         # cap >= n_edges branch above skips it: there edges IS co,
         # already cached — a second cache would just duplicate it.)
-        edges = (
-            edges.withColumn("_nonce", F.lit(uuid.uuid4().hex)).persist()
-        )
-        register_cleanup(edges.unpersist)
-        edges = edges.drop("_nonce")
+        edges = pin(edges, StorageLevel.MEMORY_AND_DISK_DESER)
     e1 = edges.alias("e1")
     e2 = edges.alias("e2")
     wedges = e1.join(e2, F.col("e1.s2") == F.col("e2.s1")).select(

@@ -20,7 +20,7 @@ from bugzilla_etl_spark.functions.hashing import (
 from bugzilla_etl_spark.operators import dedup as D
 from bugzilla_etl_spark.operators import similarity as SIM
 from bugzilla_etl_spark.operators import text as T
-from bugzilla_etl_spark.plans.catalog import register
+from bugzilla_etl_spark.plans.catalog import PARALLELISM_FIRST, register
 from bugzilla_etl_spark.sources import load_table
 
 # --- shared DuckDB fragments -------------------------------------------------
@@ -279,6 +279,7 @@ def embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_components",
+    conf={PARALLELISM_FIRST: "false"},
     oracle=f"""
     WITH t AS (
         SELECT doc_id, {DUCK_SHINGLES} AS sh
@@ -331,12 +332,6 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     because LSH near-dup clusters are near-cliques (measured max
     diameter 1 at sf0.01/sf0.1; chain convergence is covered by unit
     tests with long paths).  Singletons map to themselves."""
-    from bugzilla_etl_spark.tmpdirs import size_partitions_from_data
-
-    # r16 anti-scaler (driver c8 < c32): bounded intermediate frames
-    # must partition by DATA SIZE, not core count — scoped AQE knob,
-    # restored via the cleanup registry (see tmpdirs.scoped_conf).
-    size_partitions_from_data(spark)
     docs = load_table(spark, sf_dir, "documents")
     pairs = D.minhash_lsh_pairs(docs, threshold=0.5)
     return D.neardup_components(

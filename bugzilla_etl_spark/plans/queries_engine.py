@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bugzilla_etl_spark.functions.hashing import duckdb_hash64
-from bugzilla_etl_spark.plans.catalog import register
+from bugzilla_etl_spark.plans.catalog import PARALLELISM_FIRST, register
 from bugzilla_etl_spark.sources import load_table
 from bugzilla_etl_spark.tmpdirs import pin, tracked_mkdtemp
 
@@ -1425,6 +1425,7 @@ def _profile_hll_duck_val(expr: str) -> str:
 
 @register(
     "profile_table_hll",
+    conf={PARALLELISM_FIRST: "false"},
     oracle=f"""
     WITH vals AS (
         {" UNION ALL ".join(
@@ -1487,12 +1488,6 @@ def profile_table_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     strings (cents / epoch seconds — see _PROFILE_VAL), so the
     sketch is bit-identical cross-engine and registers MAX-merge
     across incremental runs."""
-    from bugzilla_etl_spark.tmpdirs import size_partitions_from_data
-
-    # r16 anti-scaler (driver c8 < c32): bounded intermediate frames
-    # must partition by DATA SIZE, not core count — scoped AQE knob,
-    # restored via the cleanup registry (see tmpdirs.scoped_conf).
-    size_partitions_from_data(spark)
     od = load_table(spark, sf_dir, "orders")
     melt = _profile_melt(od)
     # Both outputs are functions of the DISTINCT (column, value)

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from bugzilla_etl_spark.operators import alias as A
 from bugzilla_etl_spark.operators import normalize as N
-from bugzilla_etl_spark.plans.catalog import register
+from bugzilla_etl_spark.plans.catalog import PARALLELISM_FIRST, register
 from bugzilla_etl_spark.sources import load_table
 from bugzilla_etl_spark.tmpdirs import tracked_mkdtemp
 
@@ -193,6 +193,7 @@ def alias_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "alias_compact",
+    conf={PARALLELISM_FIRST: "false"},
     oracle="""
     WITH u AS (SELECT DISTINCT user_id AS id FROM events),
     m AS (
@@ -221,13 +222,6 @@ def alias_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     (u{4k+3} -> u{4k+2} -> u{4k}), so the oracle's closed-form CASE is
     exactly the chain-followed mapping.  The store write/read is the
     point of the query; the oracle checks the surviving values."""
-    from bugzilla_etl_spark.tmpdirs import size_partitions_from_data
-
-    # r16 anti-scaler (driver c8 < c32): bounded intermediate frames
-    # must partition by DATA SIZE, not core count — scoped AQE knob,
-    # restored via the cleanup registry (see tmpdirs.scoped_conf).
-    size_partitions_from_data(spark)
-
     from bugzilla_etl_spark.sinks.alias_store import (
         load_aliases,
         merge_aliases,

@@ -16,6 +16,8 @@ reference: parse_bug_history.py:292/:653/:626/:970/:1088 (flags),
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -23,7 +25,7 @@ from bugzilla_etl_spark.functions.hashing import duckdb_hash64
 from bugzilla_etl_spark.operators import alias as AL
 from bugzilla_etl_spark.operators import flags as FL
 from bugzilla_etl_spark.operators import subentity as SUB
-from bugzilla_etl_spark.plans.catalog import register
+from bugzilla_etl_spark.plans.catalog import PARALLELISM_FIRST, register
 from bugzilla_etl_spark.plans.queries_engine import (
     _HLL_2P50,
     _HLL_2P51,
@@ -31,7 +33,8 @@ from bugzilla_etl_spark.plans.queries_engine import (
     _HLL_NUM,
 )
 from bugzilla_etl_spark.sources import load_table
-from bugzilla_etl_spark.tmpdirs import tracked_mkdtemp
+from bugzilla_etl_spark.streaming.progress import snapshot
+from bugzilla_etl_spark.tmpdirs import current, register_cleanup, tracked_mkdtemp
 from bugzilla_etl_spark.sources.tables import normalize_events_ts
 
 # ---- deterministic flag-change synthesis (same CASEs both engines) --
@@ -303,6 +306,7 @@ _CC_EMAIL_DUCK = (
 
 @register(
     "alias_minimize",
+    conf={PARALLELISM_FIRST: "false"},
     oracle=f"""
     WITH ch AS (
       SELECT user_id * 7 + (event_id % 7) AS bug_id,
@@ -342,12 +346,6 @@ def alias_minimize(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle is the single-round closed form — the iterative machinery
     beyond round one (folding, chain closure) is covered by unit
     tests with multi-round alias chains."""
-    from bugzilla_etl_spark.tmpdirs import size_partitions_from_data
-
-    # r16 anti-scaler (driver c8 < c32): bounded intermediate frames
-    # must partition by DATA SIZE, not core count — scoped AQE knob,
-    # restored via the cleanup registry (see tmpdirs.scoped_conf).
-    size_partitions_from_data(spark)
     from bugzilla_etl_spark.operators.alias import minimize_aliases
 
     ev = load_table(spark, sf_dir, "events")
@@ -419,6 +417,9 @@ def stream_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
+    # the memory sink's temp view holds the output rows: drop it
+    # when the run ends, like the checkpoint dir
+    register_cleanup(partial(spark.catalog.dropTempView, name))
     q.awaitTermination()
     out = spark.table(name)
     from pyspark.sql import Window
@@ -487,6 +488,7 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
+    register_cleanup(partial(spark.catalog.dropTempView, name))
     q.awaitTermination()
     return spark.table(name).select(
         "event_id",
@@ -547,6 +549,7 @@ def stream_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
+    register_cleanup(partial(spark.catalog.dropTempView, name))
     q.awaitTermination()
     out = spark.table(name)
     from pyspark.sql import Window
@@ -846,7 +849,11 @@ def build_full_docs(
     return AL.resolve_aliases(docs, alias_mapping, cols=["modified_by"])
 
 
-@register("bug_version_full", oracle=_FULL_ORACLE)
+@register(
+    "bug_version_full",
+    oracle=_FULL_ORACLE,
+    conf={PARALLELISM_FIRST: "false"},
+)
 def bug_version_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The COMPLETE reference ES document: versioned snapshot state
     (interval bounds, rolled-forward scalar, accumulated set) PLUS
@@ -861,12 +868,6 @@ def bug_version_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     the correct plan; neither side is broadcastable at 100 TB).
     reference: parse_bug_history.py (whole), transform_bugzilla.py
     normalize(), bz_etl.py ES doc assembly."""
-    from bugzilla_etl_spark.tmpdirs import size_partitions_from_data
-
-    # r16 anti-scaler (driver c8 < c32): bounded intermediate frames
-    # must partition by DATA SIZE, not core count — scoped AQE knob,
-    # restored via the cleanup registry (see tmpdirs.scoped_conf).
-    size_partitions_from_data(spark)
     return build_full_docs(
         load_table(spark, sf_dir, "events"), pin_spine=True
     )
@@ -940,6 +941,7 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
+    register_cleanup(partial(spark.catalog.dropTempView, name))
     q.awaitTermination()
     out = spark.table(name)
     from pyspark.sql import Window
@@ -1029,6 +1031,7 @@ def stream_sessionize_ooo(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
+    register_cleanup(partial(spark.catalog.dropTempView, name))
     q.awaitTermination()
     return spark.table(name).where(F.col("user_id") >= 0)
 
@@ -1037,7 +1040,6 @@ def stream_sessionize_ooo(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_bug_versions(
     spark: SparkSession,
     sf_dir: str,
-    fine_split: bool = False,
     n_buckets: int = 4,
 ) -> DataFrame:
     """The reference's incremental ETL loop as a REAL streaming run:
@@ -1153,22 +1155,15 @@ def stream_bug_versions(
             docs_dir=f"{work}/docs",
             checkpoint_dir=f"{work}/ckpt",
             build_fn=build_full_docs,
-            fine_split=fine_split,
             n_buckets=n_buckets,
         ).start()
         q.awaitTermination()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    # progress + per-phase split for the streambench lane (round-13
-    # verdict task 3: the 17.5 s marginal needed the attribution
-    # pair's progress-split diagnosis)
-    from bugzilla_etl_spark.streaming import progress as _progress
-    from bugzilla_etl_spark.streaming.incremental_versions import (
-        LAST_SPLIT,
-    )
-
-    _progress.record("stream_bug_versions", q)
-    _progress.LAST["stream_bug_versions"]["split"] = dict(LAST_SPLIT)
+    # progress for the streambench lane beside the per-phase split
+    # the writer recorded (round-13 verdict task 3: the 17.5 s
+    # marginal needed the attribution pair's progress-split diagnosis)
+    current().stats["progress"] = snapshot(q)
     import os
 
     if not os.path.exists(f"{work}/docs"):
@@ -1437,6 +1432,7 @@ def stream_previous_values(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
+    register_cleanup(partial(spark.catalog.dropTempView, name))
     q.awaitTermination()
     return spark.table(name)
 
@@ -1494,6 +1490,7 @@ def stream_previous_values_ooo(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
+    register_cleanup(partial(spark.catalog.dropTempView, name))
     q.awaitTermination()
     # sentinel rows ride through the stateful op as their own group;
     # filter them on the MATERIALIZED result (in-stream filtering
@@ -1613,6 +1610,7 @@ def stream_heavy_hitters(
             .trigger(availableNow=True)
             .start()
         )
+        register_cleanup(partial(spark.catalog.dropTempView, name))
         q.awaitTermination()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
@@ -2178,8 +2176,7 @@ def _attribution_streams(
 
 
 def _run_attribution(
-    spark: SparkSession, out, tag: str = "stream_attribution",
-    state_partitions: int = 4,
+    spark: SparkSession, out, state_partitions: int = 4
 ) -> DataFrame:
     """Run an attribution join to a memory sink (availableNow,
     one real micro-batch per landed file) and return the table.
@@ -2207,13 +2204,11 @@ def _run_attribution(
 
     The finished query's progress summary (state rows/memory,
     per-batch durationMs components incl. per-operator
-    commitTimeMs) is stashed in ``streaming.progress.LAST[tag]`` so
+    commitTimeMs) is stored as the run's ``stats["progress"]`` so
     the streambench lane can embed it — the r12 interval-join
     re-pin taught that a wall-clock step with no recorded
     state/commit metrics cannot be root-caused after the fact."""
     import uuid
-
-    from bugzilla_etl_spark.streaming import progress as _progress
 
     name = f"stream_att_{uuid.uuid4().hex[:8]}"
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
@@ -2232,10 +2227,11 @@ def _run_attribution(
             .trigger(availableNow=True)
             .start()
         )
+        register_cleanup(partial(spark.catalog.dropTempView, name))
         q.awaitTermination()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    _progress.record(tag, q)
+    current().stats["progress"] = snapshot(q)
     return spark.table(name)
 
 
@@ -2313,9 +2309,7 @@ def stream_attribution_outer(
             " div 1000000"
         ).alias("gap_s"),
     )
-    return _run_attribution(
-        spark, out, tag="stream_attribution_outer"
-    ).where(F.col("user_id") != -1)
+    return _run_attribution(spark, out).where(F.col("user_id") != -1)
 
 
 from bugzilla_etl_spark.plans.queries_dedup import (  # noqa: E402

@@ -16,7 +16,7 @@ from bugzilla_etl_spark.operators import dedup as D
 from bugzilla_etl_spark.operators import sampling as S2
 from bugzilla_etl_spark.operators import similarity as SIM
 from bugzilla_etl_spark.operators import text as T
-from bugzilla_etl_spark.plans.catalog import register
+from bugzilla_etl_spark.plans.catalog import PARALLELISM_FIRST, register
 from bugzilla_etl_spark.plans.queries_dedup import (
     DUCK_SHINGLES,
     DUCK_TOKENS,
@@ -1124,6 +1124,7 @@ def _pca_iter_sql(i: int) -> str:
 
 @register(
     "embedding_pca",
+    conf={PARALLELISM_FIRST: "false"},
     oracle=f"""
     WITH q AS (
         SELECT vec_id, label, j,
@@ -1195,12 +1196,6 @@ def embedding_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
     thirty model-sized stages of scheduling overhead for 640 rows
     of integer math — and rejected; the collect is bounded by label
     cardinality, never corpus-sized."""
-    from bugzilla_etl_spark.tmpdirs import size_partitions_from_data
-
-    # r16 anti-scaler (driver c8 < c32): bounded intermediate frames
-    # must partition by DATA SIZE, not core count — scoped AQE knob,
-    # restored via the cleanup registry (see tmpdirs.scoped_conf).
-    size_partitions_from_data(spark)
     import numpy as np
 
     emb = load_table(spark, sf_dir, "embeddings")

@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 from bugzilla_etl_spark.functions import hashing as H
 from bugzilla_etl_spark.functions.hashing import duckdb_hash64
 from bugzilla_etl_spark.operators import text as T
-from bugzilla_etl_spark.plans.catalog import register
+from bugzilla_etl_spark.plans.catalog import PARALLELISM_FIRST, register
 from bugzilla_etl_spark.sources import load_table
 
 DUCK_TOKENS = "regexp_split_to_array(lower(trim(text)), '\\s+')"
@@ -932,7 +932,11 @@ def duck_bpe_encode(
     """
 
 
-@register("bpe_encode", oracle=duck_bpe_encode())
+@register(
+    "bpe_encode",
+    oracle=duck_bpe_encode(),
+    conf={PARALLELISM_FIRST: "false"},
+)
 def bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CORPUS-grain tokenization with the learned BPE merges — the
     production step a training pipeline actually runs after #183's
@@ -963,12 +967,6 @@ def bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     own catalog entry #191 ``bpe_encode_join`` (r15 verdict task 2).
     reference scope: training-data pipeline extension (pairs with
     #93/#183; r14 verdict task 8)."""
-    from bugzilla_etl_spark.tmpdirs import size_partitions_from_data
-
-    # r16 anti-scaler (driver c8 < c32): bounded intermediate frames
-    # must partition by DATA SIZE, not core count — scoped AQE knob,
-    # restored via the cleanup registry (see tmpdirs.scoped_conf).
-    size_partitions_from_data(spark)
     docs = load_table(spark, sf_dir, "documents")
     return bpe_encode_docs(docs, bpe_tokenizer_map(spark, docs))
 

@@ -42,34 +42,7 @@ from bugzilla_etl_spark.streaming.snapshot_stream import (
     restore_orphaned_buckets,
     swap_buckets,
 )
-
-#: Per-phase wall split of the LAST stream_full_rebuild run, summed
-#: across its micro-batches (the operators/backfill.LAST_SPLIT
-#: precedent; round-13 verdict task 3 — stream_bug_versions' 17.5 s
-#: marginal had never received the progress-split diagnosis that
-#: root-caused the attribution pair).  Phases: ``restore`` = orphan
-#: healing, ``discover`` = touched-bucket collect, ``append`` =
-#: archive append write, ``rebuild_write`` = the touched-history
-#: read + build_fn pipeline + prev-store merge + swap-dir write (one
-#: action — splitting it further would need an extra materialization
-#: that changes the measured plan), ``swap`` = bucket renames.
-#:
-#: Under ``fine_split`` additional ``fs_*`` keys appear
-#: (fs_hist_read/fs_build/fs_prev_read/fs_write): they are a
-#: DECOMPOSITION of the rebuild path, not extra phases — fs_write
-#: equals that run's rebuild_write by construction — so consumers
-#: summing "the phases" must exclude the ``fs_`` prefix or the
-#: write wall double-counts (r15 review).
-LAST_SPLIT: dict[str, float] = {}
-
-
-def _reset_split() -> None:
-    LAST_SPLIT.clear()
-    LAST_SPLIT["n_batches"] = 0
-
-
-def _add(key: str, sec: float) -> None:
-    LAST_SPLIT[key] = round(LAST_SPLIT.get(key, 0.0) + sec, 3)
+from bugzilla_etl_spark.tmpdirs import add_split
 
 
 def stream_full_rebuild(
@@ -81,31 +54,30 @@ def stream_full_rebuild(
     entity: str = "user_id",
     event_id: str = "event_id",
     n_buckets: int = 16,
-    fine_split: bool = False,
 ):
     """foreachBatch writer: touched-entity full rebuild through
     ``build_fn`` (events subset -> document rows; must include the
     entity column) into a bucketed parquet document store.
 
-    ``fine_split=True`` is the diagnosis mode (r14 verdict task 3):
-    it persists and counts each rebuild_write sub-stage (touched
-    archive read, build_fn pipeline, prev-store read, final write)
-    so the phase wall decomposes into ``fs_hist_read`` /
-    ``fs_build`` / ``fs_prev_read`` / ``fs_write`` entries in
-    LAST_SPLIT.  The extra materializations CHANGE the measured plan
-    (each stage loses pipelining into the next), so the sub-walls
-    are attribution evidence, not a performance mode — never enable
-    it in a bench lane's timed path."""
-
-    _reset_split()
+    Each micro-batch adds its per-phase wall to the current run's
+    ``stats["split"]`` (``tmpdirs.add_split``; the operators/backfill
+    precedent — stream_bug_versions' 17.5 s marginal had never
+    received the progress-split diagnosis that root-caused the
+    attribution pair).  Phases: ``restore`` = orphan healing,
+    ``discover`` = touched-bucket collect, ``append`` = archive append
+    write, ``rebuild_write`` = the touched-history read + build_fn
+    pipeline + prev-store merge + swap-dir write (one action —
+    splitting it further would need an extra materialization that
+    changes the measured plan), ``swap`` = bucket renames;
+    ``n_batches`` counts the micro-batches."""
 
     def rebuild(batch: DataFrame, batch_id: int) -> None:
         import os
 
-        LAST_SPLIT["n_batches"] += 1
+        add_split("n_batches", 1)
         t = time.perf_counter()
         restore_orphaned_buckets(docs_dir)
-        _add("restore", time.perf_counter() - t)
+        add_split("restore", time.perf_counter() - t)
         spark = batch.sparkSession
         bucket = F.pmod(F.hash(entity), F.lit(n_buckets))
         b = batch.withColumn("bucket", bucket)
@@ -113,12 +85,12 @@ def stream_full_rebuild(
         touched_b = sorted(
             r.bucket for r in b.select("bucket").distinct().collect()
         )
-        _add("discover", time.perf_counter() - t)
+        add_split("discover", time.perf_counter() - t)
         if not touched_b:
             return
         t = time.perf_counter()
         b.write.mode("append").partitionBy("bucket").parquet(archive_dir)
-        _add("append", time.perf_counter() - t)
+        add_split("append", time.perf_counter() - t)
 
         touched = b.select(entity).distinct()
         hist = (
@@ -128,21 +100,7 @@ def stream_full_rebuild(
             .join(F.broadcast(touched), on=entity, how="left_semi")
             .drop("bucket")
         )
-        pinned = []
-        t = time.perf_counter()
-        if fine_split:
-            hist = hist.persist()
-            hist.count()
-            pinned.append(hist)
-            _add("fs_hist_read", time.perf_counter() - t)
-            t = time.perf_counter()
         docs = build_fn(hist).withColumn("bucket", bucket)
-        if fine_split:
-            docs = docs.persist()
-            docs.count()
-            pinned.append(docs)
-            _add("fs_build", time.perf_counter() - t)
-            t = time.perf_counter()
 
         existing = [
             k
@@ -155,25 +113,14 @@ def stream_full_rebuild(
                 .parquet(*[f"{docs_dir}/bucket={k}" for k in existing])
                 .join(F.broadcast(touched), on=entity, how="left_anti")
             )
-            if fine_split:
-                prev = prev.persist()
-                prev.count()
-                pinned.append(prev)
-                _add("fs_prev_read", time.perf_counter() - t)
-                t = time.perf_counter()
             docs = docs.unionByName(prev)
         tmp = f"{docs_dir}/.swap_{batch_id}"
         t = time.perf_counter()
         docs.write.mode("overwrite").partitionBy("bucket").parquet(tmp)
-        w = time.perf_counter() - t
-        _add("rebuild_write", w)
-        if fine_split:
-            _add("fs_write", w)
-            for frame in pinned:
-                frame.unpersist()
+        add_split("rebuild_write", time.perf_counter() - t)
         t = time.perf_counter()
         swap_buckets(docs_dir, tmp, touched_b, batch_id)
-        _add("swap", time.perf_counter() - t)
+        add_split("swap", time.perf_counter() - t)
 
     return (
         events_stream.writeStream.foreachBatch(rebuild)

@@ -14,15 +14,13 @@ compact dict: micro-batch count, input rows, state rows/memory, and
 the summed ``durationMs`` components (``addBatch`` = data work;
 ``walCommit``/``commitOffsets``/state commit = checkpoint IO — the
 component that moves under host commit-latency contention while
-data work stands still).  Entry runners stash it in ``LAST`` keyed
-by entry name; tools/streambench.py embeds the winning pass's
-snapshot in its JSON line, so STREAMBENCH_r13 onward a step change
-carries its own attribution.
+data work stands still).  Entry runners store it as the current
+run's ``stats["progress"]`` (see ``tmpdirs``); tools/streambench.py
+embeds the winning pass's snapshot in its JSON line, so
+STREAMBENCH_r13 onward a step change carries its own attribution.
 """
 
 from __future__ import annotations
-
-LAST: dict[str, dict] = {}
 
 
 def snapshot(q) -> dict:
@@ -60,7 +58,3 @@ def snapshot(q) -> dict:
         for k, v in (p.get("durationMs") or {}).items():
             out["duration_ms"][k] = out["duration_ms"].get(k, 0) + int(v)
     return out
-
-
-def record(name: str, q) -> None:
-    LAST[name] = snapshot(q)

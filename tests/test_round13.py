@@ -65,21 +65,17 @@ def test_det_ln_sql_matches_libm_within_tolerance():
 
 # ---- backfill split accounting ----------------------------------------
 
-def test_backfill_split_sums_to_wall(spark):
+def test_backfill_split_sums_to_wall(spark, sf_dir):
     import time
 
-    from bugzilla_etl_spark.operators import backfill as B
     from bugzilla_etl_spark.plans import catalog
 
     catalog.load_all()
-    fn = catalog.QUERIES["full_backfill_clustered"]
-    B.reset_split()
     t0 = time.perf_counter()
-    fn(spark, "/root/testdata/sf0.001").write.format(
-        "noop"
-    ).mode("overwrite").save()
-    wall = time.perf_counter() - t0
-    s = dict(B.LAST_SPLIT)
+    with catalog.run("full_backfill_clustered", spark, sf_dir) as run:
+        run.frame.write.format("noop").mode("overwrite").save()
+        wall = time.perf_counter() - t0
+    s = run.stats["split"]
     assert s["blocks_walked"] == 5.0
     accounted = s["landing_write_sec"] + s["validate_sec"] + s["walk_sec"]
     # split must account for the entry's work: everything outside it

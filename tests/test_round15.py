@@ -269,35 +269,6 @@ def test_seq_packing_ids_invariants(spark, sf_dir):
         spi.unpersist()
 
 
-def test_stream_bug_versions_fine_split_decomposition(spark, sf_dir):
-    """The fine_split diagnosis mode (r14 verdict task 3) must stay
-    exercised, not just shipped: fs_hist_read/fs_build/fs_write are
-    present and positive, fs_write equals rebuild_write by
-    construction (the decomposition convention LAST_SPLIT documents
-    — consumers summing phases exclude fs_*), and no cached frames
-    leak after the run."""
-    from bugzilla_etl_spark.plans.queries_history import (
-        stream_bug_versions,
-    )
-    from bugzilla_etl_spark.streaming.incremental_versions import (
-        LAST_SPLIT,
-    )
-
-    sc = spark.sparkContext
-    before = set(sc._jsc.getPersistentRDDs().keySet().toArray())
-    stream_bug_versions(spark, sf_dir, fine_split=True).collect()
-    split = dict(LAST_SPLIT)
-    assert {"fs_hist_read", "fs_build", "fs_write"} <= set(split)
-    assert split["fs_hist_read"] > 0 and split["fs_build"] > 0
-    assert split["fs_write"] == split["rebuild_write"]
-    # fs_prev_read appears only for batches with an existing store
-    # (batch 1 has none); with 3 batches it must have shown up
-    assert split["n_batches"] == 3 and "fs_prev_read" in split
-    after = set(sc._jsc.getPersistentRDDs().keySet().toArray())
-    leaked = after - before
-    assert not leaked, f"fine_split leaked caches: {leaked}"
-
-
 def test_bpe_encode_docs_per_batch_plan_is_exchange_free(spark):
     """The ingest twin's per-batch contract, plan-asserted: given a
     prebuilt tokenizer map (what each micro-batch receives — the

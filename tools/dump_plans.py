@@ -1,9 +1,9 @@
 """Dump `.explain("formatted")` output for catalog queries to
-plans/$PLAN_ROUND/<query>_<suffix>.txt (default r17) — the judge-checkable plan artifacts
-the optimization round commits alongside each change.
+OUT_DIR/<query>_<suffix>.txt — plan evidence to read beside an
+optimization change.
 
-Usage: python tools/dump_plans.py SUFFIX QUERY [QUERY ...]
-       python tools/dump_plans.py --sf-dir /root/testdata/sf0.1 after pagerank_trade
+Usage: python tools/dump_plans.py --out OUT_DIR [--sf-dir DIR] SUFFIX QUERY [QUERY ...]
+       python tools/dump_plans.py --out /tmp/plans after pagerank_trade
 
 Building a frame may run real jobs for lifecycle entries (backfill,
 compaction): the dump reflects the RETURNED frame's plan, which is
@@ -21,35 +21,33 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> None:
     args = sys.argv[1:]
     sf_dir = "/root/testdata/sf0.1"
-    if args and args[0] == "--sf-dir":
-        sf_dir = args[1]
+    out_dir = None
+    while args and args[0] in ("--sf-dir", "--out"):
+        if args[0] == "--sf-dir":
+            sf_dir = args[1]
+        else:
+            out_dir = args[1]
         args = args[2:]
+    if out_dir is None or len(args) < 2:
+        raise SystemExit(__doc__.split("Usage: ")[1].split("\n\n")[0])
     suffix, names = args[0], args[1:]
 
     from bugzilla_etl_spark.plans import catalog
     from bugzilla_etl_spark.session import get_spark
-    from bugzilla_etl_spark import tmpdirs
 
     catalog.load_all()
     spark = get_spark("dump-plans")
     spark.sparkContext.setLogLevel("ERROR")
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans",
-        os.environ.get("PLAN_ROUND", "r17"),
-    )
     os.makedirs(out_dir, exist_ok=True)
     for name in names:
-        fn = catalog.QUERIES[name]
-        df = fn(spark, sf_dir)
-        txt = spark._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+        with catalog.run(name, spark, sf_dir) as run:
+            txt = spark._jvm.PythonSQLUtils.explainString(
+                run.frame._jdf.queryExecution(), "formatted"
+            )
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
             f.write(txt)
         print(f"wrote {path} ({len(txt.splitlines())} lines)")
-        tmpdirs.gc_now()
 
 
 if __name__ == "__main__":

@@ -550,9 +550,15 @@ def _first_diff(a: list[str], b: list[str]) -> int:
     )
 
 
+def _collect(spark, name: str, sf_dir: str):
+    """``name``'s result as pandas, collected inside its run scope."""
+    with catalog.run(name, spark, sf_dir) as run:
+        return run.frame.toPandas()
+
+
 def check_oracle(spark, con, name: str, sf_dir: str) -> dict:
     """Spark result of ``name`` over ``sf_dir`` vs its oracle on ``con``."""
-    spdf = catalog.QUERIES[name](spark, sf_dir).toPandas()
+    spdf = _collect(spark, name, sf_dir)
     dpdf = con.execute(catalog.ORACLES[name]).df()
     if sorted(spdf.columns) != sorted(dpdf.columns):
         return _row(
@@ -575,7 +581,7 @@ def check_oracle(spark, con, name: str, sf_dir: str) -> dict:
 
 
 def check_runs(spark, name: str, sf_dir: str) -> dict:
-    rows = canon_frame(catalog.QUERIES[name](spark, sf_dir).toPandas())
+    rows = canon_frame(_collect(spark, name, sf_dir))
     return _row("pass", len(rows))
 
 
@@ -597,17 +603,9 @@ HOSTILE = {
 
 @contextmanager
 def hostile_conf(spark):
-    saved = {k: spark.conf.get(k, None) for k in HOSTILE}
-    for k, v in HOSTILE.items():
-        spark.conf.set(k, v)
-    try:
+    with tmpdirs.scope("hostile"):
+        tmpdirs.apply_conf(spark, HOSTILE)
         yield
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 _FLOAT = re.compile(r"-?\d+\.\d+(?:e[+-]?\d+)?")
@@ -625,9 +623,9 @@ def _blur(rows: list[str]) -> list[str]:
 
 def check_self(spark, name: str, sf_dir: str) -> dict:
     """Deployment-profile rows vs ``HOSTILE``-profile rows."""
-    a = canon_frame(catalog.QUERIES[name](spark, sf_dir).toPandas())
+    a = canon_frame(_collect(spark, name, sf_dir))
     with hostile_conf(spark):
-        b = canon_frame(catalog.QUERIES[name](spark, sf_dir).toPandas())
+        b = canon_frame(_collect(spark, name, sf_dir))
     if a == b:
         return _row("pass", len(a))
     i = _first_diff(a, b)
@@ -651,8 +649,6 @@ def _loop(names, check, key=str, fail_as="fail") -> dict:
             rec = check(name)
         except Exception as e:  # noqa: BLE001 — a failing query is a row
             rec = _row("fail", None, f"{type(e).__name__}: {str(e)[:300]}")
-        finally:
-            tmpdirs.gc_now()
         if rec["status"] == "fail":
             rec["status"] = fail_as
         out[key(name)] = rec

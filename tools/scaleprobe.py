@@ -27,7 +27,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -116,13 +115,9 @@ VARIANTS = {
 
 
 def resolve_query(name: str, catalog):
-    if name in VARIANTS:
-        base, kw = VARIANTS[name]
-        fn = catalog.QUERIES.get(base)
-        if fn is None:
-            return None
-        return lambda spark, d: fn(spark, d, **kw)
-    return catalog.QUERIES.get(name)
+    """``name`` or ``name@variant`` -> (catalog name, kwargs), or None."""
+    base, kw = VARIANTS.get(name, (name, {}))
+    return (base, kw) if base in catalog.QUERIES else None
 
 
 def replicate(spark, src_dir: str, dst_dir: str, factor: int) -> None:
@@ -160,7 +155,6 @@ def replicate(spark, src_dir: str, dst_dir: str, factor: int) -> None:
 
 def main() -> None:
     import math
-    import tempfile
 
     args = sys.argv[1:]
     factor = int(args[0]) if args else 10
@@ -181,26 +175,22 @@ def main() -> None:
 
     out: dict = {}
     for name in queries:
-        fn = resolve_query(name, catalog)
-        if fn is None:
+        resolved = resolve_query(name, catalog)
+        if resolved is None:
             # loud skip: a typo'd name must not read as "measured"
             print(
                 f"unknown query/variant {name!r} — skipped",
                 file=sys.stderr,
             )
             continue
+        base, kw = resolved
         # warmup at base (codegen), then min-of-2 each scale
-        fn(spark, base_dir).write.format("noop").mode("overwrite").save()
+        catalog.noop_pass(base, spark, base_dir, **kw)
 
         def timed(sf: str) -> float:
-            runs = []
-            for _ in range(2):
-                t0 = time.perf_counter()
-                fn(spark, sf).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                runs.append(time.perf_counter() - t0)
-            return min(runs)
+            return min(
+                catalog.noop_pass(base, spark, sf, **kw)[0] for _ in range(2)
+            )
 
         t_base = timed(base_dir)
         t_big = timed(big)

@@ -30,7 +30,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -98,23 +97,13 @@ def perf_probe(
 
     out: dict = {}
     for name in queries:
-        fn = catalog.QUERIES.get(name)
-        if fn is None:
+        if name not in catalog.QUERIES:
             print(f"unknown query {name!r} — skipped", file=sys.stderr)
             continue
-        fn(spark, perf_src).write.format("noop").mode(
-            "overwrite"
-        ).save()  # codegen warmup
+        catalog.noop_pass(name, spark, perf_src)  # codegen warmup
 
         def timed(d: str) -> float:
-            runs = []
-            for _ in range(2):
-                t0 = time.perf_counter()
-                fn(spark, d).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                runs.append(time.perf_counter() - t0)
-            return min(runs)
+            return min(catalog.noop_pass(name, spark, d)[0] for _ in range(2))
 
         t_u = timed(perf_src)
         t_s = timed(skewed)

@@ -111,7 +111,6 @@ def main() -> None:
 
     from bugzilla_etl_spark.plans import catalog
     from bugzilla_etl_spark.session import get_spark
-    from bugzilla_etl_spark.tmpdirs import gc_now
 
     catalog.load_all()
     spark = get_spark("streambench")
@@ -124,14 +123,12 @@ def main() -> None:
     noop1 = round(min(_noop_stream(spark, 1) for _ in range(3)), 3)
     noop3 = round(min(_noop_stream(spark, 3) for _ in range(3)), 3)
 
-    from bugzilla_etl_spark.streaming import progress as _progress
-
     # stream_bpe_encode serves a SAVED tokenizer artifact in
     # production (r15 verdict task 3); price the one-time train+save
     # separately and time the entry on the LOAD path — the pin is
     # then protocol-insensitive (no fresh-vs-warm learn-loop delta).
-    # Plain mkdtemp, NOT tracked: the per-pass gc_now() below would
-    # delete a tracked artifact between runs.
+    # The artifact outlives every timed run: a plain mkdtemp, removed
+    # below once all entries have run.
     import shutil
     import tempfile
 
@@ -161,22 +158,21 @@ def main() -> None:
     timings: dict[str, float] = {}
     progress: dict[str, dict] = {}
     for name in STREAMING:
-        fn = catalog.QUERIES.get(name)
-        if fn is None:
+        if name not in catalog.QUERIES:
             continue
         runs = []
         best_prog = None
         for _ in range(N_RUNS):
-            _progress.LAST.pop(name, None)
-            t0 = time.perf_counter()
-            fn(
-                spark, sf_dir, **prep_kwargs.get(name, {})
-            ).write.format("noop").mode("overwrite").save()
-            dt = time.perf_counter() - t0
-            if name in _progress.LAST and (not runs or dt < min(runs)):
-                best_prog = _progress.LAST[name]
+            # each pass is its own run: its landing/checkpoint dirs
+            # and memory-sink view go when it ends
+            dt, stats = catalog.noop_pass(
+                name, spark, sf_dir, **prep_kwargs.get(name, {})
+            )
+            if "progress" in stats and (not runs or dt < min(runs)):
+                best_prog = stats["progress"]
+                if "split" in stats:
+                    best_prog = {**best_prog, "split": stats["split"]}
             runs.append(dt)
-            gc_now()  # each pass cleans its landing/checkpoint dirs
         timings[name] = round(min(runs), 3)
         if best_prog:
             progress[name] = best_prog

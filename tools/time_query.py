@@ -4,16 +4,15 @@ the whole 141-query lane — the A/B harness for optimization work.
 
 Usage: python tools/time_query.py [--runs N] [--sf-dir DIR] QUERY [QUERY ...]
 
-Prints one line per query: name, min, median, all runs.  Releases
-tracked caches/scratch between queries exactly like bench.py so a
-timed pass always computes from parquet.
+Prints one line per query: name, min, median, all runs.  Each pass
+is its own ``catalog.run``, released after its clock stops exactly
+like bench.py, so a timed pass always computes from parquet.
 """
 
 from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -35,7 +34,6 @@ def main() -> None:
 
     from bugzilla_etl_spark.plans import catalog
     from bugzilla_etl_spark.session import get_spark
-    from bugzilla_etl_spark import tmpdirs
 
     catalog.load_all()
     spark = get_spark("time-query")
@@ -43,15 +41,12 @@ def main() -> None:
     spark.range(1000).selectExpr("sum(id)").collect()
 
     for name in names:
-        fn = catalog.QUERIES[name]
         spark.sparkContext.setJobDescription(f"warmup: {name}")
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        catalog.noop_pass(name, spark, sf_dir)
         runs: list[float] = []
         for i in range(runs_n):
             spark.sparkContext.setJobDescription(f"timed[{i}]: {name}")
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            runs.append(time.perf_counter() - t0)
+            runs.append(catalog.noop_pass(name, spark, sf_dir)[0])
         spark.sparkContext.setJobDescription(None)
         runs.sort()
         print(
@@ -59,7 +54,6 @@ def main() -> None:
             f"runs={[round(r, 3) for r in runs]}",
             flush=True,
         )
-        tmpdirs.gc_now()
 
 
 if __name__ == "__main__":

@@ -25,7 +25,6 @@ import json
 import math
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -106,18 +105,15 @@ def main() -> None:
     spark = get_spark("tri-decade")
     spark.sparkContext.setLogLevel("ERROR")
 
-    fixed = catalog.QUERIES["triangle_count"]
-    scaled = catalog.QUERIES["triangle_count_scaled"]
+    fixed, scaled = "triangle_count", "triangle_count_scaled"
     # warmup (codegen/classload) at base
-    fixed(spark, base_dir).write.format("noop").mode("overwrite").save()
-    scaled(spark, base_dir).write.format("noop").mode("overwrite").save()
+    catalog.noop_pass(fixed, spark, base_dir)
+    catalog.noop_pass(scaled, spark, base_dir)
 
-    def timed(fn, sf):
-        runs = []
-        for _ in range(2):
-            t0 = time.perf_counter()
-            fn(spark, sf).write.format("noop").mode("overwrite").save()
-            runs.append(round(time.perf_counter() - t0, 3))
+    def timed(name, sf):
+        runs = [
+            round(catalog.noop_pass(name, spark, sf)[0], 3) for _ in range(2)
+        ]
         return min(runs), runs
 
     out: dict = {}
@@ -134,7 +130,8 @@ def main() -> None:
         )
         wall_f, runs_f = timed(fixed, big)
         wall_s, runs_s = timed(scaled, big)
-        kf = scaled(spark, big).limit(1).collect()
+        with catalog.run(scaled, spark, big) as run:
+            kf = run.frame.limit(1).collect()
         out[str(factor)] = {
             "co_edges": prof["co_edges"],
             "fixed": {**prof["fixed"], "wall_s": wall_f, "runs": runs_f},
