@@ -5,7 +5,11 @@ Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
 materialized with the noop sink (full execution, no driver collect
 overhead).  Output:
     {"metric": "...", "value": <total sec>, "unit": "sec",
-     "queries": {"tpch_q1": sec, ...}, "sf": 0.1}
+     "queries": {"tpch_q1": sec, ...}, "sf": 0.1,
+     "host": {"master": ..., "spark": ..., "shuffle_partitions": ...}}
+
+stdout is the only output: save a lane with ``python bench.py >
+FILE`` and compare it with ``tools/bench_alert.py``.
 """
 
 from __future__ import annotations
@@ -42,7 +46,7 @@ HEADLINE = [
     "text_quality",
     "doc_fingerprint",
     "mm_features",
-    # engine surface (BASELINE.md: first measured round sets the pin)
+    # engine surface
     "pivot_event_counts",
     "unpivot_measures",
     "rollup_returns",
@@ -198,35 +202,6 @@ HEADLINE = [
     "mix_apply",
 ]
 
-# The original 23-query set pinned against BASELINE.md — summed into
-# the tail `comparable23_total` field so the headline number survives
-# any front-truncation of the recorded JSON line (round-7 lesson:
-# the driver preserved only the line's tail and the comparable
-# entries fell off the front of `queries`).
-COMPARABLE23 = HEADLINE[:23]
-
-# Coarse family rollups, also emitted at the tail.
-def _family(name: str) -> str:
-    if name in COMPARABLE23:
-        return "comparable23"
-    if name.startswith("tpch_"):
-        return "tpch"
-    if name.startswith(("dedup_", "ann_", "embedding_", "winnow_")) or name in (
-        "semdedup",
-        "kmeans_embeddings",
-        "decontam_neardup",
-    ):
-        return "dedup_sim"
-    if name.startswith(
-        ("quota_", "seq_", "shuffle_", "mix_", "pii_", "curate_",
-         "stratified_", "dsir_", "char_", "bpe_", "filter_", "ngram_",
-         "html_", "token_", "heavy_", "cooccurrence_", "decontam_",
-         "quality_", "bloom_", "hll_", "count_", "hist_", "lang_",
-         "text_")
-    ):
-        return "llm_text"
-    return "engine_etl"
-
 # Timed passes per query after one untimed warmup.  Reported per-query
 # time is the MIN of the passes (with the median alongside): two
 # rounds in a row needed manual "was it environmental?" forensics
@@ -257,6 +232,17 @@ def _io_probe_mb_s(mb: int = 32) -> float:
         except OSError:
             pass
     return round(mb / dt, 1)
+
+
+def host_info(spark) -> dict:
+    """What a lane's timings depend on besides the code: the master
+    (hence the core count), the Spark version and the shuffle
+    partition count.  Two lanes compare only when these match."""
+    return {
+        "master": spark.sparkContext.master,
+        "spark": spark.version,
+        "shuffle_partitions": spark.conf.get("spark.sql.shuffle.partitions"),
+    }
 
 
 def main() -> None:
@@ -319,15 +305,6 @@ def main() -> None:
 
     io_probe_end = _io_probe_mb_s()
 
-    fam: dict[str, float] = {}
-    for name, t in timings.items():
-        f = _family(name)
-        fam[f] = round(fam.get(f, 0.0) + t, 3)
-    # Field ORDER is load-bearing: the bulky per-query dicts go
-    # FIRST and every headline summary number LAST, so a recorder
-    # that keeps only the tail of the line still preserves the
-    # totals (BENCH_r07 lost the comparable-23 entries off the
-    # front; the tail fields make that unrepeatable).
     out = {
         "metric": "headline_queries_total_wall",
         "unit": "sec",
@@ -338,36 +315,11 @@ def main() -> None:
         "runs_per_query": N_RUNS,
         "aggregation": "min",
         "n_queries": len(timings),
-        "family_totals": fam,
-        "comparable23_total": round(
-            sum(timings.get(n, 0.0) for n in COMPARABLE23), 3
-        ),
         "value": round(sum(timings.values()), 3),
         "sf": sf,
-        # Wall-clock the lane finished measuring, embedded IN the
-        # artifact because committed files get their mtime reset by
-        # any checkout/clone — bench_alert's corroboration freshness
-        # guard reads this field, falling back to mtime only when
-        # absent (r15 advice, medium).  Last field = survives a
-        # front-truncated driver wrapper.
-        "measured_at": int(time.time()),
+        "host": host_info(spark),
     }
-    line = json.dumps(out)
-    # Belt-and-braces artifact: r15's round-over-round comparison was
-    # lost because the driver's tail buffer truncated the stdout line
-    # (BENCH_r15 parsed: null -> PERF_r16 n_common: 0).  Writing the
-    # same line to a file next to bench.py means the next round's
-    # comparison can always recover the full prev lane even if the
-    # stdout capture truncates again (r16 verdict item 8).
-    try:
-        self_path = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "BENCH_SELF.json"
-        )
-        with open(self_path, "w") as f:
-            f.write(line + "\n")
-    except OSError:
-        pass  # read-only checkout: stdout remains the contract
-    print(line)
+    print(json.dumps(out))
 
 
 if __name__ == "__main__":

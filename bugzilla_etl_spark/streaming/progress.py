@@ -1,13 +1,10 @@
 """StreamingQueryProgress capture for the bench/diagnosis lane.
 
-The round-12 BASELINE re-pin of the stream-stream interval joins
-(stream_attribution 12.8 -> 17.8 s, the outer form 19.2 -> 25.7 s,
-query code untouched since r9) was justified only by hypothesis
-("plausibly testdata/stat drift").  Round-13 evidence killed that
-hypothesis — the sf0.1 gate row counts for every streaming entry are
-IDENTICAL across the r10/r11/r12 artifacts — which leaves the
-runtime itself: to localize where a streaming second goes, the run
-must record its own ``StreamingQueryProgress``.
+Wall clock alone cannot say where a streaming second goes: the
+stream-stream interval joins (stream_attribution and its outer form)
+once slowed by about a third with their query code and their input
+row counts unchanged, which left the runtime itself.  To localize the
+cost, the run records its own ``StreamingQueryProgress``.
 
 ``snapshot(q)`` turns a finished query's ``recentProgress`` into a
 compact dict: micro-batch count, input rows, state rows/memory, and
@@ -16,8 +13,8 @@ the summed ``durationMs`` components (``addBatch`` = data work;
 component that moves under host commit-latency contention while
 data work stands still).  Entry runners store it as the current
 run's ``stats["progress"]`` (see ``tmpdirs``); tools/streambench.py
-embeds the winning pass's snapshot in its JSON line, so
-STREAMBENCH_r13 onward a step change carries its own attribution.
+embeds the winning pass's snapshot in its JSON line, so a step
+change in the streaming lane carries its own attribution.
 """
 
 from __future__ import annotations

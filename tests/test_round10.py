@@ -200,128 +200,6 @@ def test_replicate_cycle_pending_is_broadcast_probe(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------
-# bench_alert — the mechanical regression gate (round-9 verdict #3).
-
-
-def test_bench_alert_pins_parse_and_full_coverage_is_clean(tmp_path):
-    """BASELINE.md parses to a full pin table (batch + streaming), and
-    an artifact measuring every pin at its pin value crosses zero
-    alerts with COMPLETE pin coverage (ok fails closed: a pinned
-    query with no measurement flips ok to False)."""
-    import json
-    import sys
-    from pathlib import Path
-
-    repo = Path(__file__).resolve().parent.parent
-    sys.path.insert(0, str(repo / "tools"))
-    import bench_alert as BA
-
-    pins = BA.parse_pins()
-    assert len(pins) > 130
-    # first-occurrence wins: the re-pinned invindex keeps its
-    # original (alert-basis) pin
-    assert pins["dedup_jaccard_invindex"] == 3.997
-    # streaming pins present
-    assert pins["stream_bug_versions"] == 16.907
-    # round-10 additions pinned
-    assert "full_backfill_clustered" in pins and "replicate_cycle" in pins
-
-    # no `_rN` suffix, so the informational move list finds no
-    # committed previous-round artifact to diff against
-    bench = tmp_path / "bench.json"
-    bench.write_text(json.dumps({"queries": pins}))
-    report = BA.check(str(bench), None)
-    assert report["ok"], (report["alerts"], report["missing_pinned"])
-    assert not report["unpinned"], report["unpinned"]
-    assert not report["missing_pinned"], report["missing_pinned"]
-    assert report["recovery"] == "full"
-
-
-def test_bench_alert_fails_closed_on_partial_coverage(tmp_path):
-    """A truncated artifact that measures only a few pinned queries
-    must NOT report ok — 'OK' means 'checked everything', not 'found
-    nothing among what survived' (the r9 driver wrapper recovers
-    only ~half the timed queries)."""
-    import json
-    import sys
-    from pathlib import Path
-
-    repo = Path(__file__).resolve().parent.parent
-    sys.path.insert(0, str(repo / "tools"))
-    import bench_alert as BA
-
-    partial = tmp_path / "BENCH_r99.json"
-    partial.write_text(json.dumps({"queries": {"tpch_q1": 0.3}}))
-    report = BA.check(str(partial), None)
-    assert not report["ok"]
-    assert len(report["missing_pinned"]) > 100
-    assert not report["alerts"]
-
-
-def test_bench_alert_wrapper_recovery_is_labeled(tmp_path):
-    """A driver wrapper ({n, rc, tail}) holds a front-truncated copy
-    of bench.py's line.  When the tail lost the whole `queries` dict,
-    recovery yields medians — load_bench must label that, and label a
-    tail that still holds `queries` as partial (mins first)."""
-    import json
-    import sys
-    from pathlib import Path
-
-    repo = Path(__file__).resolve().parent.parent
-    sys.path.insert(0, str(repo / "tools"))
-    import bench_alert as BA
-
-    def wrapper(tail):
-        p = tmp_path / "wrapper.json"
-        p.write_text(json.dumps({"n": 9, "rc": 0, "tail": tail}))
-        return BA.load_bench(str(p))
-
-    d = wrapper(
-        'pch_q1": 0.9, "queries": {"tpch_q1": 0.3, "tpch_q3": 0.5},'
-        ' "queries_median": {"tpch_q1": 0.4, "tpch_q3": 0.6},'
-        ' "runs_per_query": 3, "comparable23_total": 12.0, "sf": 0.1}\n'
-    )
-    assert d["recovery"] == "tail-partial"
-    # the cut-off leading key is skipped; each name's first
-    # occurrence is its min
-    assert d["queries"] == {"tpch_q1": 0.3, "tpch_q3": 0.5}
-    assert d["comparable23_total"] == 12.0 and d["sf"] == 0.1
-
-    d = wrapper(
-        'pch_q1": 0.3}, "queries_median": {"tpch_q1": 0.4,'
-        ' "tpch_q3": 0.6}, "runs_per_query": 3, "value": 50.0}\n'
-    )
-    assert d["recovery"] == "tail-median-only"
-    assert d["queries"] == {"tpch_q1": 0.4, "tpch_q3": 0.6}
-    assert d["value"] == 50.0
-
-    full = tmp_path / "full.json"
-    full.write_text(json.dumps({"queries": {"tpch_q1": 0.3}}))
-    assert BA.load_bench(str(full))["recovery"] == "full"
-
-
-def test_bench_alert_flags_a_crossing(tmp_path):
-    """A synthetic bench with one query at 3x its pin must exit the
-    report not-ok with exactly that alert."""
-    import json
-    import sys
-    from pathlib import Path
-
-    repo = Path(__file__).resolve().parent.parent
-    sys.path.insert(0, str(repo / "tools"))
-    import bench_alert as BA
-
-    bad = tmp_path / "BENCH_r99.json"
-    bad.write_text(json.dumps({
-        "queries": {"tpch_q1": 0.984},  # pin 0.328, alert 0.66
-        "comparable23_total": 12.0,
-    }))
-    report = BA.check(str(bad), None)
-    assert not report["ok"]
-    assert [a["query"] for a in report["alerts"]] == ["tpch_q1"]
-
-
-# ---------------------------------------------------------------------
 # partition-plan determinism — the same query under the deployment
 # profile and under a hostile one (7 shuffle partitions, 64 KB scan
 # splits, AQE off) must produce identical canonical value rows.  A

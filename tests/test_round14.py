@@ -126,7 +126,7 @@ def test_stream_bug_versions_split_and_pin_restore(spark, sf_dir):
     """The r14 diagnosis wiring: the run records a per-phase wall
     split (restore/discover/append/rebuild_write/swap) in its stats
     for the streambench lane, and the lifetime shuffle-partition pin
-    (STREAMBENCH_r14 lane-witnessed 17.91 -> 16.94 s at sf0.1) is
+    (17.91 -> 16.94 s at sf0.1 in the streaming lane) is
     RESTORED after the query — the r13 attribution fix's
     regression-test discipline applied to this entry."""
     from bugzilla_etl_spark.plans import catalog

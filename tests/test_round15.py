@@ -298,127 +298,3 @@ def test_bpe_encode_docs_per_batch_plan_is_exchange_free(spark):
     rows = {r.doc_id: r for r in out.collect()}
     assert rows[1].token_ids == "1 2 3"
     assert rows[2].n_terms == 0 and rows[2].token_ids == ""
-
-
-# --- bench-alert host-noise calibration (r14 verdict task 2) ------
-
-
-def _ba():
-    import sys
-    from pathlib import Path
-
-    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
-    import bench_alert as BA
-
-    return BA
-
-
-def test_host_factor_median_and_clamps():
-    BA = _ba()
-    # quiet host: ratios ~1.0 -> factor clamps at the 1.0 floor
-    quiet = {q: ref for q, ref in BA.CALIBRATION.items()}
-    hf, detail = BA.host_factor(quiet)
-    assert hf == 1.0 and detail["median_raw"] == 1.0
-    # fast host must NOT tighten (floor 1.0: can't hide regressions)
-    fast = {q: ref * 0.5 for q, ref in BA.CALIBRATION.items()}
-    assert BA.host_factor(fast)[0] == 1.0
-    # 1.5x ambient tax -> factor 1.5
-    slow = {q: ref * 1.5 for q, ref in BA.CALIBRATION.items()}
-    hf, detail = BA.host_factor(slow)
-    assert hf == pytest.approx(1.5) and detail["median_raw"] == 1.5
-    # pathological: ceiling at 3.0
-    dead = {q: ref * 10 for q, ref in BA.CALIBRATION.items()}
-    assert BA.host_factor(dead)[0] == 3.0
-    # fewer than 3 members -> uncalibrated, labeled
-    hf, detail = BA.host_factor({"quality_repetition": 0.83})
-    assert hf == 1.0 and "note" in detail
-
-
-def test_calibrated_gate_forgives_ambient_tax_not_regressions(tmp_path):
-    """A 1.5x-slow host pushing a pinned query past 2x raw must NOT
-    alert once calibrated (the r14 driver-lane scenario, with the
-    synthetic probe CORROBORATING the slowdown); the same
-    measurement on a quiet host (calibration queries at reference)
-    MUST still alert — ambient tax forgiven, real regressions not."""
-    import json
-
-    BA = _ba()
-    pin = BA.parse_pins()["tpch_q1"]
-    taxed = {q: ref * 1.5 for q, ref in BA.CALIBRATION.items()}
-    taxed["tpch_q1"] = pin * 2.2  # >2x raw, ~1.47x calibrated
-    p = tmp_path / "BENCH_r98.json"
-    p.write_text(json.dumps({"queries": taxed}))
-    report = BA.check(str(p), None, synth=1.5)  # probe agrees: host
-    assert report["host_factor"] == pytest.approx(1.5)
-    assert not any(
-        a["query"] == "tpch_q1" for a in report["alerts"]
-    ), report["alerts"]
-
-    quiet = {q: ref for q, ref in BA.CALIBRATION.items()}
-    quiet["tpch_q1"] = pin * 2.2  # same raw wall, quiet host
-    p2 = tmp_path / "BENCH_r99.json"
-    p2.write_text(json.dumps({"queries": quiet}))
-    report2 = BA.check(str(p2), None)
-    assert report2["host_factor"] == 1.0
-    assert any(a["query"] == "tpch_q1" for a in report2["alerts"])
-
-
-def test_uncorroborated_host_factor_is_capped(tmp_path):
-    """The r15 review's blind spot, closed: calibration members are
-    PRODUCT queries, so a uniform 2x code regression reads as a 2.0
-    median — but the repo-independent synthetic probe still reads
-    ~1.0, the factor caps at probe x headroom, and the 2.2x-pin
-    query ALERTS instead of being divided back under its pin."""
-    import json
-
-    BA = _ba()
-    pin = BA.parse_pins()["tpch_q1"]
-    slid = {q: ref * 2.0 for q, ref in BA.CALIBRATION.items()}
-    # 2.7x pin: divided by the UNCAPPED 2.0 median it would read
-    # 1.35x (silently forgiven); at the capped 1.3 it reads 2.08x
-    # and crosses
-    slid["tpch_q1"] = pin * 2.7
-    p = tmp_path / "BENCH_r97.json"
-    p.write_text(json.dumps({"queries": slid}))
-    report = BA.check(str(p), None, synth=1.0)  # probe: host is fine
-    assert report["synthetic_factor"] == 1.0
-    assert report["host_factor"] == pytest.approx(BA.SYNTH_HEADROOM)
-    assert "UNCORROBORATED" in report["calibration"]["note"]
-    assert any(a["query"] == "tpch_q1" for a in report["alerts"])
-    assert not report["ok"]
-
-
-def test_stale_artifact_keeps_median_without_probe(tmp_path):
-    """Corroboration requires a FRESH artifact: host state is
-    transient, so probing the current host says nothing about a lane
-    measured hours ago — a stale taxed artifact keeps its median
-    (no false alerts from capping) and the report says why.  synth
-    stays None: the stale path must return WITHOUT running a probe
-    (this test would hang on a Spark session otherwise)."""
-    import json
-    import os
-    import time
-
-    BA = _ba()
-    taxed = {q: ref * 2.0 for q, ref in BA.CALIBRATION.items()}
-    p = tmp_path / "BENCH_r96.json"
-    p.write_text(json.dumps({"queries": taxed}))
-    old = time.time() - BA.CORROBORATE_MAX_AGE_S - 60
-    os.utime(p, (old, old))
-    report = BA.check(str(p), None)
-    assert report["host_factor"] == pytest.approx(2.0)
-    assert "synthetic_factor" not in report
-    assert "NOT corroborated" in report["calibration"]["note"]
-
-
-def test_calibration_members_are_pinned_and_benchmarked():
-    """Every calibration query must be in BASELINE.md's pin table AND
-    in bench.py's HEADLINE list — a renamed/dropped member would
-    silently shrink the median's sample."""
-    import bench
-
-    BA = _ba()
-    pins = BA.parse_pins()
-    for q in BA.CALIBRATION:
-        assert q in pins, q
-        assert q in bench.HEADLINE, q

@@ -1,145 +1,10 @@
-"""Round-16 additions, part 1: the bench-alert artifact-provenance
-fixes (r15 advice — embedded measured_at for the corroboration
-freshness guard; same-conditions cross-check before the streaming
-lane borrows the batch host_factor)."""
+"""Round-16 additions: gram-index width checks, bpe_encode join
+mode, the persisted tokenizer artifact, mix_apply and the
+sessionize-ooo timeout fix."""
 
 from __future__ import annotations
 
-import json
-import os
-import time
-
 import pytest
-
-
-def _ba():
-    import sys
-    from pathlib import Path
-
-    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
-    import bench_alert as BA
-
-    return BA
-
-
-def test_freshness_guard_reads_embedded_measured_at(tmp_path):
-    """A committed artifact's mtime is reset by any checkout, so a
-    lane measured DAYS ago under genuine host tax can look mtime-
-    fresh.  With measured_at embedded, the guard must treat it as
-    stale (median kept, no probe) even though the file was written
-    this instant."""
-    BA = _ba()
-    taxed = {q: ref * 2.0 for q, ref in BA.CALIBRATION.items()}
-    stale_at = int(time.time()) - BA.CORROBORATE_MAX_AGE_S - 3600
-    p = tmp_path / "BENCH_r95.json"
-    p.write_text(json.dumps({"queries": taxed, "measured_at": stale_at}))
-    # mtime is NOW (just written) — the old mtime proxy would have
-    # called this fresh and capped the factor
-    report = BA.check(str(p), None)
-    assert report["host_factor"] == pytest.approx(2.0)
-    assert "synthetic_factor" not in report
-    assert "NOT corroborated" in report["calibration"]["note"]
-    assert report["calibration"]["age_source"] == "measured_at"
-
-
-def test_freshness_guard_falls_back_to_mtime_with_note(tmp_path):
-    """Pre-r16 artifacts carry no measured_at: the guard falls back
-    to mtime and SAYS so, keeping old artifacts evaluable."""
-    BA = _ba()
-    taxed = {q: ref * 2.0 for q, ref in BA.CALIBRATION.items()}
-    p = tmp_path / "BENCH_r94.json"
-    p.write_text(json.dumps({"queries": taxed}))
-    old = time.time() - BA.CORROBORATE_MAX_AGE_S - 60
-    os.utime(p, (old, old))
-    report = BA.check(str(p), None)
-    assert report["host_factor"] == pytest.approx(2.0)
-    assert "mtime" in report["calibration"]["age_source"]
-
-
-def _write_pair(tmp_path, BA, rnd_b, rnd_s, bm=None, sm=None, t=None):
-    """A quiet-host batch artifact except taxed calibration members
-    (host_factor 2.0) plus a streaming artifact whose one pinned
-    query sits at 1.5x pin — under a borrowed factor of 2.0 it reads
-    0.75x (forgiven); uncalibrated it reads 1.5x (no 2x crossing
-    either, so use 2.2x for the alert-firing variants)."""
-    pins = BA.parse_pins()
-    sname = "stream_previous_values"
-    assert sname in pins
-    taxed = {q: ref * 2.0 for q, ref in BA.CALIBRATION.items()}
-    b = {"queries": taxed}
-    if bm is not None:
-        b["measured_at"] = bm
-    s = {"queries": {sname: pins[sname] * (t or 2.2)}}
-    if sm is not None:
-        s["measured_at"] = sm
-    bp = tmp_path / f"BENCH_r{rnd_b}.json"
-    sp = tmp_path / f"STREAMBENCH_r{rnd_s}.json"
-    bp.write_text(json.dumps(b))
-    sp.write_text(json.dumps(s))
-    return str(bp), str(sp), sname
-
-
-def test_stream_lane_borrows_factor_only_same_round(tmp_path):
-    """Round-suffix mismatch between the batch and streaming
-    artifacts → the batch host_factor is NOT borrowed; the streaming
-    2.2x-pin query alerts at factor 1.0 instead of being divided
-    under its pin by a host tax measured in a different round."""
-    BA = _ba()
-    now = int(time.time())
-    bp, sp, sname = _write_pair(tmp_path, BA, 93, 92, bm=now, sm=now)
-    report = BA.check(bp, sp, synth=2.0)
-    assert report["stream_host_factor"] == 1.0
-    assert "round mismatch" in report["stream_calibration_note"]
-    assert any(a["query"] == sname for a in report["alerts"])
-
-
-def test_stream_lane_borrows_factor_only_when_fresh_pair(tmp_path):
-    """Same round but measured hours apart → host state is not
-    shared; factor not borrowed, streaming alert fires."""
-    BA = _ba()
-    now = int(time.time())
-    apart = now - BA.CORROBORATE_MAX_AGE_S - 120
-    bp, sp, sname = _write_pair(tmp_path, BA, 91, 91, bm=now, sm=apart)
-    report = BA.check(bp, sp, synth=2.0)
-    assert report["stream_host_factor"] == 1.0
-    assert "apart" in report["stream_calibration_note"]
-    assert any(a["query"] == sname for a in report["alerts"])
-
-
-def test_stream_lane_same_conditions_pair_is_calibrated(tmp_path):
-    """Same round, measured minutes apart, probe corroborates the
-    tax → the streaming lane IS calibrated by the batch factor and a
-    2.2x raw / 1.1x calibrated query does not alert."""
-    BA = _ba()
-    now = int(time.time())
-    bp, sp, sname = _write_pair(tmp_path, BA, 90, 90, bm=now, sm=now - 300)
-    report = BA.check(bp, sp, synth=2.0)
-    assert report["stream_host_factor"] == pytest.approx(2.0)
-    assert not any(a["query"] == sname for a in report["alerts"])
-
-
-def test_stream_lane_legacy_pair_keeps_old_behavior(tmp_path):
-    """Both artifacts pre-r16 (no measured_at): same-round filename
-    match is accepted, with the legacy note in the report — old
-    committed rounds stay evaluable without spurious alerts."""
-    BA = _ba()
-    bp, sp, sname = _write_pair(tmp_path, BA, 89, 89)
-    report = BA.check(bp, sp, synth=2.0)
-    assert report["stream_host_factor"] == pytest.approx(2.0)
-    assert "pre-r16" in report["stream_calibration_note"]
-    assert not any(a["query"] == sname for a in report["alerts"])
-
-
-def test_bench_artifacts_embed_measured_at():
-    """bench.py and streambench.py must stamp measured_at into the
-    JSON they print — greppable contract so a refactor can't drop
-    the field the freshness guard depends on."""
-    import pathlib
-
-    root = pathlib.Path(__file__).resolve().parent.parent
-    for rel in ("bench.py", "tools/streambench.py"):
-        src = (root / rel).read_text()
-        assert '"measured_at": int(time.time())' in src, rel
 
 
 def test_probe_gram_index_rejects_width_mismatch(spark, tmp_path):

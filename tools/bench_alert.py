@@ -1,597 +1,138 @@
-"""Mechanical bench regression alerts (round-9 verdict item 3).
+"""Bench regression check against the same-host baseline lanes.
 
-Before this tool, a regression only became visible if a human read
-two JSON files side by side.  This reads the newest (or named)
-BENCH_rN.json and STREAMBENCH_rN.json against the pins in
-BASELINE.md and exits nonzero on any crossing of the standing rules:
+    python tools/bench_alert.py BENCH.json [STREAMBENCH.json]
 
-- per-query: calibrated measurement > 2 x pin (the BASELINE.md
-  alert column)
-- headline:  calibrated comparable-23 total > 1.5 x its 22.43 s pin
-- streaming: same 2 x rule over the streaming-pin table
+BENCH.json is the line `python bench.py` prints, STREAMBENCH.json the
+line `python tools/streambench.py` prints.  Each is compared with its
+baseline lane in the repo root, BASELINE_bench.json or
+BASELINE_streambench.json (BASELINE.md says how they were recorded).
+The exit status is non-zero when:
 
-It also diffs against the PREVIOUS round's bench and lists every
-shared query that moved >1.3x — informational (the documented
-+-0.15 s host-noise class routinely trips it on sub-second
-queries), never an exit condition on its own.
+- a query's min is more than 2x its baseline min;
+- the batch total over the baseline's batch queries is more than 1.5x
+  the baseline's total;
+- a baseline query of a given lane has no measurement (fail closed:
+  OK means every baseline query was checked);
+- a lane's `host` or scale factor differs from its baseline's (no
+  verdict: walls from different hosts or scales do not compare).
 
-HOST-NOISE CALIBRATION (r14 verdict task 2): round 14's driver lane
-ran 1.2-1.6x slow ambient (two identical-code totals 145.2/145.8 s
-vs r13's 117.8, DIFFERENT queries slow in each run), which produced
-15 spurious >1.3x movers and would let a real 1.4x regression hide
-inside a 2x crossing.  The gate therefore measures the host first:
-a fixed CALIBRATION set of five pinned, plan-stable queries (chosen
-for <4% round-over-round drift on quiet hosts, spread across plan
-families) each has an embedded quiet-host reference wall; the
-median measured/reference ratio, clamped to [1.0, 3.0], is the
-round's ``host_factor``.  Every rule then evaluates CALIBRATED
-times (measured / host_factor), and the >1.3x move list compares
-each lane calibrated by its OWN factor.  The clamp floor at 1.0
-means calibration only ever forgives ambient slowness — a fast
-host can never hide a regression; the 3.0 ceiling keeps a
-pathological calibration from suppressing a genuine global
-regression (and a factor near the ceiling is itself loud in the
-report).  Fewer than 3 calibration queries measured -> factor 1.0
-(raw evaluation, labeled).
-
-Pin source: every `| name | ... | pin | alert |` row of BASELINE.md
-tables.  Where a query appears in more than one table (re-pins),
-the FIRST occurrence wins — BASELINE.md's rule is that old pins
-remain the alert basis until a driver round confirms the new floor.
-
-Usage:
-    python tools/bench_alert.py                  # newest artifacts
-    python tools/bench_alert.py BENCH_r10.json   # explicit bench
-    python tools/bench_alert.py --json OUT.json  # also write report
+Queries the baseline lacks are listed as information only.  A
+streaming lane that is not given is not checked, and the summary says
+so.
 """
 
 from __future__ import annotations
 
-import glob
 import json
 import os
-import re
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-COMPARABLE23_PIN = 22.43
-COMPARABLE23_ALERT = 33.6  # 1.5x, the BASELINE.md headline rule
-
-# Host-calibration set: five pinned, plan-stable queries with <4%
-# round-over-round drift on quiet hosts (measured across
-# BENCH_LOCAL_r13/r14), spread across plan families (map-only text
-# scan, window SCD2, ANN arrow kernel, diff replay, sketch profile).
-# Values are quiet-host reference walls (mean of the r13/r14 lanes,
-# sf0.1 local[32] min-of-3).  Chosen to EXCLUDE queries whose plan
-# improved since their pin (e.g. ann_topk pin 1.005 vs current 0.37
-# — a stale pin would read a quiet host as "fast" and under-correct
-# slow ones).
-CALIBRATION = {
-    "quality_repetition": 0.83,
-    "snapshot_versions": 0.33,
-    "ann_ivf_nprobe": 0.82,
-    "diff_rollback": 0.62,
-    "profile_table_hll": 1.33,
-}
-HOST_FACTOR_MIN = 1.0  # never tighten: a fast host can't hide a regression
-HOST_FACTOR_MAX = 3.0  # never forgive a >3x global slide silently
-
-# Corroboration guard (r15 review): the calibration members are
-# PRODUCT queries, so a uniform code regression (a session default,
-# a JVM flag) is indistinguishable from ambient host tax by the
-# median alone — the gate would divide the regression away.  When
-# the median exceeds this threshold, a SYNTHETIC probe (pure-JVM
-# md5-over-range, independent of every repo plan) measures the host
-# directly; the effective factor is capped at synthetic_factor x
-# SYNTH_HEADROOM, so an uncorroborated "host tax" stops being
-# forgiven and real crossings alert again.
-CORROBORATE_ABOVE = 1.25
-SYNTH_REF = 2.49       # quiet-host wall of the probe (warm min-of-3)
-SYNTH_HEADROOM = 1.3   # product queries feel host state (IO, paging)
-#                        somewhat more than the pure-CPU probe
+QUERY_RATIO = 2.0
+TOTAL_RATIO = 1.5
 
 
-#: Corroboration is only meaningful when the probe runs under the
-#: SAME conditions the artifact was measured under — the host state
-#: is transient.  An artifact older than this is not corroborable
-#: (the load that taxed it may have subsided, and capping then would
-#: fire FALSE alerts); the check keeps the median and says so.
-CORROBORATE_MAX_AGE_S = 2 * 3600
-
-
-def synthetic_factor() -> float:
-    """Measure the host with a fixed pure-JVM probe: 150M codegen
-    md5s folded to one max — no repo code, no data, no shuffle.  A
-    warmup run then min-of-3, ratioed to the embedded quiet-host
-    reference.  Reuses the process's ACTIVE SparkSession when one
-    exists (the probe only needs the shared context; stopping a
-    session the caller owns — e.g. pytest's session fixture — would
-    kill every later test, r15 review) and only stops a session it
-    created itself."""
-    import time
-
-    from pyspark.sql import SparkSession
-
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        spark, own = active, False
-    else:
-        from bugzilla_etl_spark.session import get_spark
-
-        spark, own = get_spark("bench-alert-synth"), True
-        spark.sparkContext.setLogLevel("ERROR")
-    try:
-        from pyspark.sql import functions as F
-
-        def run() -> float:
-            t0 = time.perf_counter()
-            spark.range(150_000_000).select(
-                F.max(F.md5(F.col("id").cast("string"))).alias("m")
-            ).collect()
-            return time.perf_counter() - t0
-
-        run()  # warmup (JVM/codegen)
-        return round(min(run() for _ in range(3)) / SYNTH_REF, 3)
-    finally:
-        if own:
-            spark.stop()
-
-
-def host_factor(queries: dict[str, float]) -> tuple[float, dict]:
-    """Median measured/reference ratio over the calibration set,
-    clamped to [HOST_FACTOR_MIN, HOST_FACTOR_MAX].  Returns
-    (factor, detail) where detail carries per-query ratios and the
-    unclamped median for the report."""
-    import statistics
-
-    ratios = {
-        q: round(queries[q] / ref, 3)
-        for q, ref in CALIBRATION.items()
-        if queries.get(q, 0) > 0
-    }
-    if len(ratios) < 3:
-        return 1.0, {
-            "ratios": ratios,
-            "median_raw": None,
-            "note": "fewer than 3 calibration queries measured;"
-                    " raw (uncalibrated) evaluation",
-        }
-    med = statistics.median(ratios.values())
-    return (
-        min(max(med, HOST_FACTOR_MIN), HOST_FACTOR_MAX),
-        {"ratios": ratios, "median_raw": round(med, 3)},
-    )
-
-# Scalar / rollup fields that the wrapper-tail regex recovery also
-# matches; never per-query timings.
-NON_QUERY = {
-    "comparable23", "comparable23_total", "engine_etl", "dedup_sim",
-    "llm_text", "tpch", "n_queries", "runs_per_query", "sf", "value",
-    "n", "rc", "cpus", "noop_1batch", "noop_3batch",
-    "per_batch_overhead", "measured_at",
-    "stream_bpe_encode_train_save_sec",
-    # r13 bench diagnostics: the `splits` sub-dict's timing keys and
-    # the io probe's start/end — recovered by the same tail regex,
-    # never query timings
-    "landing_write_sec", "validate_sec", "walk_sec", "blocks_walked",
-    "pass_total_sec", "start", "end",
-    # streambench `progress` sub-dict keys
-    "batches", "input_rows", "state_rows_max", "state_mem_bytes_max",
-}
-
-
-def parse_pins(path: str | None = None) -> dict[str, float]:
-    """Every `| name | ... |` table row whose trailing cells are a
-    pin and an alert; first occurrence of a name wins (old pins stay
-    the alert basis until a driver round confirms a re-pin)."""
-    path = path or os.path.join(REPO, "BASELINE.md")
-    pins: dict[str, float] = {}
-    row = re.compile(
-        r"^\| ([a-z0-9_]+) \|(?: [0-9.]+ \|){0,2} ([0-9.]+) \| [0-9.]+ \|"
-    )
+def load(path: str) -> dict:
     with open(path) as f:
-        for line in f:
-            m = row.match(line)
-            if m and m.group(1) not in pins:
-                pins[m.group(1)] = float(m.group(2))
-    return pins
+        return json.load(f)
 
 
-def load_bench(path: str) -> dict:
-    """Read a bench artifact in either shape: bench.py's own JSON
-    line, or the driver's wrapper ({n, rc, tail, ...}) whose `tail`
-    holds a possibly front-truncated copy of that line.  For the
-    wrapper, per-query pairs are regex-recovered from the tail (the
-    tail-field ordering in bench.py exists exactly so the summary
-    numbers survive truncation)."""
-    with open(path) as f:
-        d = json.load(f)
-    if "queries" in d:
-        d.setdefault("recovery", "full")
-        return d
-    tail = d.get("tail", "") or ""
-    queries: dict[str, float] = {}
-    # the tail may contain both `queries` and `queries_median`; take
-    # each name's FIRST occurrence (min precedes median in the line).
-    # If the truncation cut off the whole `queries` dict, everything
-    # recovered is a MEDIAN: medians ≥ mins, so pin comparisons can
-    # only over-fire (a false alert), never miss a regression — but
-    # the report must say so.
-    for m in re.finditer(r'"([a-z0-9_]+)": ([0-9.]+)', tail):
-        if m.group(1) not in NON_QUERY:
-            queries.setdefault(m.group(1), float(m.group(2)))
-    out = {
-        "queries": queries,
-        "recovery": (
-            "tail-partial" if '"queries":' in tail else "tail-median-only"
-        ),
-    }
-    for key in ("comparable23_total", "value", "sf", "measured_at"):
-        m = re.search(rf'"{key}": ([0-9.]+)', tail)
-        if m:
-            out[key] = float(m.group(1))
-    return out
+def baseline(lane: str) -> dict:
+    """The committed baseline lane, `lane` being bench or streambench."""
+    return load(os.path.join(REPO, f"BASELINE_{lane}.json"))
 
 
-def newest(pattern: str) -> str | None:
-    def rnd(p: str) -> int:
-        m = re.search(r"_r(\d+)", p)
-        return int(m.group(1)) if m else -1
-
-    paths = sorted(glob.glob(os.path.join(REPO, pattern)), key=rnd)
-    return paths[-1] if paths else None
-
-
-def newest_bench() -> str | None:
-    """Newest round wins across BOTH namings — the driver's
-    BENCH_rN.json and the builder's BENCH_LOCAL_rN.json; on a round
-    tie the LOCAL artifact wins (it is the complete JSON line, the
-    driver wrapper may be front-truncated)."""
-    def key(p: str) -> tuple[int, int]:
-        m = re.search(r"_r(\d+)", p)
-        return (int(m.group(1)) if m else -1, "LOCAL" in p)
-
-    paths = sorted(
-        glob.glob(os.path.join(REPO, "BENCH_r*.json"))
-        + glob.glob(os.path.join(REPO, "BENCH_LOCAL_r*.json")),
-        key=key,
-    )
-    return paths[-1] if paths else None
-
-
-def previous(current: str) -> str | None:
-    """The newest bench artifact from a STRICTLY EARLIER round than
-    `current` (either naming; LOCAL preferred on a round tie, same
-    rule as newest_bench)."""
-    def rnd(p: str) -> int:
-        m = re.search(r"_r(\d+)", p)
-        return int(m.group(1)) if m else -1
-
-    paths = sorted(
-        (
-            p
-            for p in glob.glob(os.path.join(REPO, "BENCH_r*.json"))
-            + glob.glob(os.path.join(REPO, "BENCH_LOCAL_r*.json"))
-            if rnd(p) < rnd(current)
-        ),
-        key=lambda p: (rnd(p), "LOCAL" in p),
-    )
-    return paths[-1] if paths else None
-
-
-def check(
-    bench_path: str,
-    stream_path: str | None,
-    synth: float | None = None,
-) -> dict:
-    """``synth``: injected synthetic factor for tests; None = run
-    the real probe (only when the calibration median is elevated
-    enough to need corroboration)."""
-    pins = parse_pins()
-    report: dict = {
-        "bench": os.path.basename(bench_path),
-        "alerts": [],
-        "moved_1p3x": [],
-        "unpinned": [],
-        "ok": True,
-    }
-
-    cur = load_bench(bench_path)
-    queries = cur.get("queries", {})
-    report["recovery"] = cur.get("recovery", "full")
-
-    # host calibration: evaluate every rule on measured/host_factor
-    hf, hf_detail = host_factor(queries)
-    if hf > CORROBORATE_ABOVE:
-        # product-query calibration alone can't tell ambient host
-        # tax from a uniform code regression — corroborate with the
-        # repo-independent probe and cap the forgiveness at what the
-        # host itself can justify.  Only a FRESH artifact is
-        # corroborable: host state is transient, so probing now says
-        # nothing about a lane measured hours ago or elsewhere —
-        # capping a genuinely-taxed old lane would fire false alerts
-        # (r15 review).
-        import time
-
-        # Age from the embedded measured_at when the lane recorded
-        # one — a committed artifact's mtime is reset by any git
-        # checkout/clone, so a lane measured days ago under genuine
-        # host tax could look "fresh" via mtime and trigger the
-        # synthetic cap, firing exactly the false alerts this window
-        # exists to prevent (r15 advice, medium).  mtime is the
-        # fallback for pre-r16 artifacts, flagged as such.
-        measured_at = cur.get("measured_at")
-        if measured_at is not None:
-            age = time.time() - float(measured_at)
-            age_src = "measured_at"
-        else:
-            age = time.time() - os.path.getmtime(bench_path)
-            age_src = "mtime (no measured_at field; pre-r16 artifact)"
-        hf_detail = {**hf_detail, "age_source": age_src}
-        if age > CORROBORATE_MAX_AGE_S and synth is None:
-            hf_detail = {
-                **hf_detail,
-                "note": (
-                    f"calibration median {hf} NOT corroborated: the"
-                    f" artifact is {age / 3600:.1f} h old (per"
-                    f" {age_src}), beyond the"
-                    f" {CORROBORATE_MAX_AGE_S // 3600} h window where"
-                    " a probe of the current host says anything"
-                    " about the lane's conditions — median kept"
-                ),
-            }
-        else:
-            sf_probe = synthetic_factor() if synth is None else synth
-            report["synthetic_factor"] = sf_probe
-            capped = round(
-                min(hf, max(sf_probe, 1.0) * SYNTH_HEADROOM), 3
-            )
-            if capped < hf:
-                hf_detail = {
-                    **hf_detail,
-                    "note": (
-                        f"calibration median {hf} UNCORROBORATED by"
-                        f" the synthetic probe ({sf_probe}) — factor"
-                        f" capped at {capped}; a uniform product"
-                        " slowdown this large without matching host"
-                        " slowdown is a code regression, not ambient"
-                        " tax"
-                    ),
-                }
-            hf = capped
-    report["host_factor"] = hf
-    report["calibration"] = hf_detail
-
-    # per-query 2x-pin crossings (calibrated)
+def compare(cur: dict, base: dict, report: dict) -> None:
+    """Add `cur`'s per-query crossings, unmeasured baseline queries,
+    unpinned queries and largest ratio to `report`."""
+    if cur.get("host") is None or cur["host"] != base.get("host"):
+        sys.exit("no verdict: lane and baseline are from different hosts")
+    if cur.get("sf") != base.get("sf"):
+        sys.exit("no verdict: lane and baseline are at different scale factors")
+    queries, pins = cur["queries"], base["queries"]
     for name, t in sorted(queries.items()):
         pin = pins.get(name)
         if pin is None:
             report["unpinned"].append(name)
             continue
-        if t / hf > 2 * pin:
+        ratio = t / pin
+        if ratio > report["max_ratio"][1]:
+            report["max_ratio"] = (name, round(ratio, 3))
+        if ratio > QUERY_RATIO:
             report["alerts"].append(
-                {
-                    "query": name,
-                    "sec": t,
-                    "calibrated_sec": round(t / hf, 3),
-                    "pin": pin,
-                    "alert": round(2 * pin, 2),
-                }
+                {"query": name, "sec": t, "baseline": pin, "ratio": round(ratio, 3)}
             )
+    report["missing"] += sorted(set(pins) - set(queries))
+    report["checked"] += len(set(pins) & set(queries))
 
-    # headline rule: comparable-23 vs its 1.5x ceiling (calibrated)
-    c23 = cur.get("comparable23_total")
-    if c23 is not None:
-        report["comparable23_total"] = c23
-        report["comparable23_calibrated"] = round(c23 / hf, 3)
-        report["comparable23_alert"] = COMPARABLE23_ALERT
-        if c23 / hf > COMPARABLE23_ALERT:
-            report["alerts"].append(
-                {
-                    "query": "<comparable23_total>",
-                    "sec": c23,
-                    "calibrated_sec": round(c23 / hf, 3),
-                    "pin": COMPARABLE23_PIN,
-                    "alert": COMPARABLE23_ALERT,
-                }
-            )
 
-    # informational: >1.3x moves vs the previous round's bench —
-    # each lane calibrated by its OWN host factor, so an ambient-tax
-    # round produces an (ideally empty) post-calibration move list
-    # instead of r14's 15 spurious entries
-    prev_path = previous(bench_path)
-    if prev_path:
-        prev = load_bench(prev_path).get("queries", {})
-        # prev lane: median-only (its host is gone — no synthetic
-        # corroboration is possible retroactively); its ratios ride
-        # the report so a reader can see why the factor took its value
-        prev_hf, prev_detail = host_factor(prev)
-        report["prev_host_factor"] = prev_hf
-        report["prev_calibration"] = prev_detail
-        raw_moves = 0
-        for name, t in sorted(queries.items()):
-            p = prev.get(name)
-            if not p or p <= 0:
-                continue
-            if t > 1.3 * p:
-                raw_moves += 1
-            if t / hf > 1.3 * (p / prev_hf):
-                report["moved_1p3x"].append(
-                    {
-                        "query": name,
-                        "sec": t,
-                        "calibrated_sec": round(t / hf, 3),
-                        "prev": p,
-                        "prev_calibrated_sec": round(p / prev_hf, 3),
-                        "prev_round": os.path.basename(prev_path),
-                    }
-                )
-        report["moved_1p3x_raw_count"] = raw_moves
+def check(bench_path: str, stream_path: str | None = None) -> dict:
+    """Compare the lanes at the given paths with their baselines."""
+    report: dict = {
+        "alerts": [],
+        "missing": [],
+        "unpinned": [],
+        "max_ratio": (None, 0.0),
+        "checked": 0,
+    }
+    cur, base = load(bench_path), baseline("bench")
+    compare(cur, base, report)
 
-    # streaming lane: same 2x rule over the streaming pins.  The
-    # batch lane's host factor applies ONLY when the two artifacts
-    # were demonstrably measured under the same conditions — same
-    # round suffix AND embedded measured_at within the corroboration
-    # window.  Otherwise a taxed batch lane (factor up to 3.0) would
-    # silently forgive a real streaming regression of the same
-    # magnitude (r15 advice, low); on any mismatch the streaming
-    # rules fall back to the uncalibrated factor 1.0, which can only
-    # over-fire, never miss.
-    measured = set(queries)
-    if stream_path:
-        report["streambench"] = os.path.basename(stream_path)
-        with open(stream_path) as f:
-            sb = json.load(f)
-        stream_hf, sh_note = hf, None
-        br = re.search(r"_r(\d+)", os.path.basename(bench_path))
-        sr = re.search(r"_r(\d+)", os.path.basename(stream_path))
-        if not br or not sr or br.group(1) != sr.group(1):
-            stream_hf, sh_note = 1.0, (
-                f"round mismatch ({os.path.basename(bench_path)} vs"
-                f" {os.path.basename(stream_path)}) — batch"
-                " host_factor not borrowed, streaming uncalibrated"
-            )
-        else:
-            bm, sm = cur.get("measured_at"), sb.get("measured_at")
-            if bm is not None and sm is not None:
-                gap = abs(float(bm) - float(sm))
-                if gap > CORROBORATE_MAX_AGE_S:
-                    stream_hf, sh_note = 1.0, (
-                        f"lanes measured {gap / 3600:.1f} h apart,"
-                        f" beyond the {CORROBORATE_MAX_AGE_S // 3600} h"
-                        " same-conditions window — batch host_factor"
-                        " not borrowed, streaming uncalibrated"
-                    )
-            elif bm is None and sm is None:
-                sh_note = (
-                    "pre-r16 artifacts (no measured_at): same-round"
-                    " match accepted on filename alone"
-                )
-            else:
-                stream_hf, sh_note = 1.0, (
-                    "one lane lacks measured_at — same-conditions"
-                    " check impossible, streaming uncalibrated"
-                )
-        report["stream_host_factor"] = stream_hf
-        if sh_note:
-            report["stream_calibration_note"] = sh_note
-        for name, t in sorted(sb.get("queries", {}).items()):
-            measured.add(name)
-            pin = pins.get(name)
-            if pin is None:
-                report["unpinned"].append(name)
-                continue
-            if t / stream_hf > 2 * pin:
-                report["alerts"].append(
-                    {
-                        "query": name,
-                        "sec": t,
-                        "calibrated_sec": round(t / stream_hf, 3),
-                        "pin": pin,
-                        "alert": round(2 * pin, 2),
-                    }
-                )
+    total = round(sum(cur["queries"].get(n, 0.0) for n in base["queries"]), 3)
+    report["total"] = {"sec": total, "baseline": base["value"]}
+    if total > TOTAL_RATIO * base["value"]:
+        report["alerts"].append(
+            {
+                "query": "<batch total>",
+                "sec": total,
+                "baseline": base["value"],
+                "ratio": round(total / base["value"], 3),
+            }
+        )
 
-    # FAIL-CLOSED on coverage: every pin exists because some bench
-    # lane once measured that query, so a pinned query with no
-    # measurement in this round's artifacts means the gate did NOT
-    # check it (a front-truncated driver wrapper, a renamed query,
-    # or a lane that silently dropped entries).  "OK" must mean
-    # "checked everything", not "found nothing among what survived".
-    report["missing_pinned"] = sorted(set(pins) - measured)
-    report["coverage"] = f"{len(set(pins) & measured)}/{len(pins)} pins measured"
-    report["ok"] = not report["alerts"] and not report["missing_pinned"]
+    if stream_path is not None:
+        compare(load(stream_path), baseline("streambench"), report)
+    report["streaming_checked"] = stream_path is not None
+    report["ok"] = not report["alerts"] and not report["missing"]
     return report
 
 
 def main() -> None:
     args = sys.argv[1:]
-    json_out = None
-    if args and args[0] == "--json":
-        json_out = args[1]
-        args = args[2:]
-    bench_path = args[0] if args else newest_bench()
-    stream_path = args[1] if len(args) > 1 else newest("STREAMBENCH_r*.json")
-    if bench_path is None:
-        sys.exit("no BENCH_r*.json / BENCH_LOCAL_r*.json found")
+    if len(args) not in (1, 2):
+        sys.exit(__doc__)
+    report = check(*args)
 
-    report = check(bench_path, stream_path)
-
-    if report["recovery"] != "full":
-        print(
-            f"note  {report['bench']} is a truncated driver wrapper"
-            f" ({report['recovery']}): recovered values may be MEDIANS"
-            " (≥ min, so alerts can over-fire but never miss)"
-        )
-    hf = report.get("host_factor", 1.0)
-    cal = report.get("calibration", {})
-    print(
-        f"host_factor {hf}"
-        + (
-            f" (median {cal['median_raw']} over"
-            f" {len(cal.get('ratios', {}))} calibration queries)"
-            if cal.get("median_raw") is not None
-            else f" ({cal.get('note', 'no calibration data')})"
-        )
-    )
-    if cal.get("median_raw") is not None and cal.get("note"):
-        # the corroboration verdict (uncorroborated cap / stale
-        # artifact) must reach the console, not just the JSON —
-        # it is the one diagnostic the guard exists to surface
-        print(f"note  {cal['note']}")
     for a in report["alerts"]:
         print(
-            f"ALERT {a['query']}: {a.get('calibrated_sec', a['sec'])} s"
-            f" calibrated ({a['sec']} s raw) > {a['alert']} s"
-            f" (2x pin {a['pin']})"
-        )
-    for mv in report["moved_1p3x"]:
-        print(
-            f"note  {mv['query']}: {mv['calibrated_sec']} s calibrated"
-            f" vs {mv['prev_calibrated_sec']} s in {mv['prev_round']}"
-            " (>1.3x post-calibration; informational)"
-        )
-    if "moved_1p3x_raw_count" in report:
-        print(
-            f"moves >1.3x: {report['moved_1p3x_raw_count']} raw ->"
-            f" {len(report['moved_1p3x'])} post-calibration"
+            f"ALERT {a['query']}: {a['sec']} s is {a['ratio']}x"
+            f" its baseline {a['baseline']} s"
         )
     if report["unpinned"]:
         print(
-            f"unpinned ({len(report['unpinned'])}):"
-            f" {', '.join(sorted(set(report['unpinned'])))} — add their"
-            " first measurement to BASELINE.md"
+            f"unpinned ({len(report['unpinned'])}, not checked):"
+            f" {', '.join(report['unpinned'])}"
         )
-    if report["missing_pinned"]:
+    if report["missing"]:
         print(
-            f"MISSING {len(report['missing_pinned'])} pinned queries"
-            " with no measurement in these artifacts (gate did NOT"
-            f" check them): {', '.join(report['missing_pinned'][:8])}"
-            f"{'...' if len(report['missing_pinned']) > 8 else ''}"
+            f"MISSING {len(report['missing'])} baseline queries with no"
+            f" measurement: {', '.join(report['missing'])}"
         )
-    c23 = report.get("comparable23_total")
-    if c23 is not None:
-        c23c = report.get("comparable23_calibrated", c23)
-        print(
-            f"comparable23 {c23c} s calibrated ({c23} s raw) vs pin"
-            f" {COMPARABLE23_PIN} ({c23c / COMPARABLE23_PIN:.2f}x;"
-            f" alert {COMPARABLE23_ALERT})"
-        )
-    if json_out:
-        with open(json_out, "w") as f:
-            json.dump(report, f, indent=1)
-        print(f"wrote {json_out}")
+    name, ratio = report["max_ratio"]
+    t = report["total"]
+    print(
+        f"largest per-query ratio {ratio}x ({name}); batch total"
+        f" {t['sec']} s vs baseline {t['baseline']} s"
+        f" ({t['sec'] / t['baseline']:.3f}x)"
+    )
+    if not report["streaming_checked"]:
+        print("streaming lane not given: streaming queries not checked")
     if not report["ok"]:
         sys.exit(
-            f"{len(report['alerts'])} alert crossing(s),"
-            f" {len(report['missing_pinned'])} unmeasured pin(s)"
+            f"{len(report['alerts'])} alert(s),"
+            f" {len(report['missing'])} unmeasured baseline queries"
         )
-    print(
-        f"OK: zero alert crossings, {report['coverage']}"
-        f" ({report['bench']})"
-    )
+    print(f"OK: all {report['checked']} baseline queries checked")
 
 
 if __name__ == "__main__":

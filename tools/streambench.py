@@ -109,6 +109,7 @@ def main() -> None:
             raise SystemExit(f"unknown streaming queries: {sorted(unknown)}")
         STREAMING[:] = [n for n in STREAMING if n in only]
 
+    from bench import host_info
     from bugzilla_etl_spark.plans import catalog
     from bugzilla_etl_spark.session import get_spark
 
@@ -208,11 +209,7 @@ def main() -> None:
         "n_queries": len(timings),
         "value": round(sum(timings.values()), 3),
         "sf": sf,
-        # Embedded measurement time (not mtime — reset by checkout):
-        # bench_alert cross-checks this against the batch lane's
-        # before borrowing its host_factor for streaming pins
-        # (r15 advice, low).
-        "measured_at": int(time.time()),
+        "host": host_info(spark),
     }
     print(json.dumps(out))
 
