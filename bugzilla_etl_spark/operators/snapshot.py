@@ -267,14 +267,17 @@ def set_final_salted(
 
 def dedup_latest(
     log: DataFrame,
-    entity: str = "user_id",
+    entity: str | Sequence[str] = "user_id",
     ts: str = "ts",
     tiebreak: Sequence[str] = ("event_id",),
 ) -> DataFrame:
     """Exactly one current row per entity — what ES doc overwrite by
     ``_id`` achieves in the reference's sink.  row_number (not
-    dropDuplicates) so the survivor is deterministic."""
-    w = Window.partitionBy(entity).orderBy(
+    dropDuplicates) so the survivor is deterministic.  Also the final
+    emission per key of an update-mode stream, with ``ts`` a column
+    that grows with every update (a count)."""
+    keys = [entity] if isinstance(entity, str) else list(entity)
+    w = Window.partitionBy(*keys).orderBy(
         F.col(ts).desc(), *[F.col(c).desc() for c in tiebreak]
     )
     return (

@@ -16,7 +16,7 @@ reference: parse_bug_history.py:292/:653/:626/:970/:1088 (flags),
 
 from __future__ import annotations
 
-from functools import partial
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,10 +32,20 @@ from bugzilla_etl_spark.plans.queries_engine import (
     _HLL_H,
     _HLL_NUM,
 )
+from bugzilla_etl_spark.operators.snapshot import dedup_latest
 from bugzilla_etl_spark.sources import load_table
-from bugzilla_etl_spark.streaming.progress import snapshot
-from bugzilla_etl_spark.tmpdirs import current, register_cleanup, tracked_mkdtemp
-from bugzilla_etl_spark.sources.tables import normalize_events_ts
+from bugzilla_etl_spark.streaming.landing import (
+    arrival_mode,
+    drain,
+    events_stream,
+    land_parts,
+    landed_stream,
+    read_store_or_empty,
+    stage_stream_source,
+    to_batch_dirs,
+    to_memory,
+)
+from bugzilla_etl_spark.tmpdirs import apply_conf, tracked_mkdtemp
 
 # ---- deterministic flag-change synthesis (same CASEs both engines) --
 # name: every 5th event uses the UPPER-cased type, exercising
@@ -382,61 +392,29 @@ def stream_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     guarantees (incremental == full): streaming state must converge
     to exactly the latest event per entity.
     reference: bz_etl.py:172 incremental_etl (poll-since-watermark
-    loop), ES overwrite-by-id idempotency."""
-    import uuid
+    loop), ES overwrite-by-id idempotency.
 
+    The file source stages through ``stage_stream_source``; under the
+    arrival-order knob it lands bounded-disorder parts, and since the
+    state here is a commutative (ts, id) max-merge ANY arrival order
+    must converge (the sweep proves it)."""
     from bugzilla_etl_spark.streaming.snapshot_stream import (
         stream_current_state,
     )
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    path = f"{sf_dir}/events.parquet"
-    static = spark.read.parquet(path)
-    # the file-stream source requires a DIRECTORY; the test tables
-    # are single files, so expose the file through a temp dir (in
-    # production this is the landing directory the extractor drops
-    # incremental batches into).  stage_stream_source symlinks by
-    # default; under the arrival-order knob it lands bounded-disorder
-    # parts instead (state here is a commutative (ts, id) max-merge,
-    # so ANY arrival order must converge — the sweep proves it).
-    from bugzilla_etl_spark.streaming.landing import (
-        stage_stream_source,
-        stream_reader,
+    out = to_memory(
+        stream_current_state(events_stream(spark, sf_dir)),
+        "update",
+        "stream_snap_",
     )
-
-    srcdir = tracked_mkdtemp(prefix="bes_ssrc_")
-    stage_stream_source(path, srcdir)
-    src = normalize_events_ts(stream_reader(spark, static.schema, srcdir))
-    name = f"stream_snap_{uuid.uuid4().hex[:8]}"
-    q = (
-        stream_current_state(src)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .option("checkpointLocation", tracked_mkdtemp(prefix="bes_ss_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    # the memory sink's temp view holds the output rows: drop it
-    # when the run ends, like the checkpoint dir
-    register_cleanup(partial(spark.catalog.dropTempView, name))
-    q.awaitTermination()
-    out = spark.table(name)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy(
-        F.col("last_ts").desc(), F.col("last_event_id").desc()
-    )
-    return (
-        out.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .select(
-            "user_id",
-            F.unix_micros("last_ts").alias("last_ts"),
-            "last_event_id",
-            "last_event_type",
-            "last_value",
-        )
+    return dedup_latest(
+        out, ts="last_ts", tiebreak=("last_event_id",)
+    ).select(
+        "user_id",
+        F.unix_micros("last_ts").alias("last_ts"),
+        "last_event_id",
+        "last_event_type",
+        "last_value",
     )
 
 
@@ -457,40 +435,16 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference: bz_etl.py ES overwrite-by-_id idempotency; the
     incremental loop re-emits touched bugs and relies on the sink to
     absorb duplicates."""
-    import os
-    import uuid
-
     from bugzilla_etl_spark.streaming.snapshot_stream import (
         stream_dedup_events,
     )
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    path = f"{sf_dir}/events.parquet"
-    static = spark.read.parquet(path)
-    from bugzilla_etl_spark.streaming.landing import (
-        stage_stream_source,
-        stream_reader,
-    )
-
-    srcdir = tracked_mkdtemp(prefix="bes_sdup_")
     # copies=2: the replay.  Under the arrival knob the duplicate
     # copy of each part arrives one micro-batch later — a delayed
     # replay the within-watermark id state must still absorb.
-    stage_stream_source(path, srcdir, copies=2)
-    src = normalize_events_ts(stream_reader(spark, static.schema, srcdir))
-    name = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    q = (
-        stream_dedup_events(src)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", tracked_mkdtemp(prefix="bes_sd_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    register_cleanup(partial(spark.catalog.dropTempView, name))
-    q.awaitTermination()
-    return spark.table(name).select(
+    src = events_stream(spark, sf_dir, copies=2)
+    out = to_memory(stream_dedup_events(src), "append", "stream_dedup_")
+    return out.select(
         "event_id",
         "user_id",
         F.unix_micros("ts").alias("tsl"),
@@ -521,54 +475,25 @@ def stream_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch-equivalence test's job (test_scale_semantics).
     reference: bz_etl.py:172 incremental loop (the reference
     recomputes aggregates per poll; streaming keeps them hot)."""
-    import os
-    import uuid
-
     from bugzilla_etl_spark.streaming.snapshot_stream import (
         stream_time_rollup,
     )
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    path = f"{sf_dir}/events.parquet"
-    static = spark.read.parquet(path)
-    from bugzilla_etl_spark.streaming.landing import (
-        stage_stream_source,
-        stream_reader,
+    out = to_memory(
+        stream_time_rollup(events_stream(spark, sf_dir)),
+        "update",
+        "stream_rollup_",
     )
-
-    srcdir = tracked_mkdtemp(prefix="bes_sroll_")
-    stage_stream_source(path, srcdir)
-    src = normalize_events_ts(stream_reader(spark, static.schema, srcdir))
-    name = f"stream_rollup_{uuid.uuid4().hex[:8]}"
-    q = (
-        stream_time_rollup(src)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .option("checkpointLocation", tracked_mkdtemp(prefix="bes_sr_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    register_cleanup(partial(spark.catalog.dropTempView, name))
-    q.awaitTermination()
-    out = spark.table(name)
-    from pyspark.sql import Window
-
     # update mode re-emits a bucket per micro-batch it changes in;
     # the final state is the emission with the largest count (count
     # is strictly monotone per key across updates)
-    w = Window.partitionBy("hour", "event_type").orderBy(
-        F.col("n_events").desc()
-    )
-    return (
-        out.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .select(
-            F.unix_micros("hour").alias("hour_us"),
-            "event_type",
-            "n_events",
-            F.round("sum_value", 4).alias("sum_value"),
-        )
+    return dedup_latest(
+        out, ("hour", "event_type"), ts="n_events", tiebreak=()
+    ).select(
+        F.unix_micros("hour").alias("hour_us"),
+        "event_type",
+        "n_events",
+        F.round("sum_value", 4).alias("sum_value"),
     )
 
 
@@ -910,52 +835,19 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     (stable ordinals, growing-extent re-emit).
     reference: the same incremental==full guarantee as
     stream_snapshot (bz_etl.py:172)."""
-    import os
-    import uuid
-
     from bugzilla_etl_spark.streaming.snapshot_stream import (
         stream_sessionize as _op,
     )
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    path = f"{sf_dir}/events.parquet"
-    static = spark.read.parquet(path)
-    from bugzilla_etl_spark.streaming.landing import (
-        stage_stream_source,
-        stream_reader,
-    )
-
-    srcdir = tracked_mkdtemp(prefix="bes_sess_")
-    stage_stream_source(path, srcdir)
-    src = normalize_events_ts(stream_reader(spark, static.schema, srcdir))
-    src = src.select(
+    src = events_stream(spark, sf_dir).select(
         "user_id", F.col("ts").cast("long").alias("tsl"), "event_id"
     )
-    name = f"stream_sess_{uuid.uuid4().hex[:8]}"
-    q = (
-        _op(src)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .option("checkpointLocation", tracked_mkdtemp(prefix="bes_sq_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    register_cleanup(partial(spark.catalog.dropTempView, name))
-    q.awaitTermination()
-    out = spark.table(name)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id", "session_id").orderBy(
-        F.col("n_events").desc(), F.col("session_end").desc()
-    )
-    return (
-        out.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .select(
-            "user_id", "session_id", "n_events",
-            "session_start", "session_end",
-        )
+    out = to_memory(_op(src), "update", "stream_sess_")
+    return dedup_latest(
+        out, ("user_id", "session_id"), ts="n_events",
+        tiebreak=("session_end",),
+    ).select(
+        "user_id", "session_id", "n_events", "session_start", "session_end",
     )
 
 
@@ -995,45 +887,16 @@ def stream_sessionize_ooo(spark: SparkSession, sf_dir: str) -> DataFrame:
     within the 2h watermark must converge to the batch session set.
     reference: the incremental==full guarantee (bz_etl.py:172) under
     out-of-order delivery."""
-    import uuid
-
-    from bugzilla_etl_spark.streaming.landing import (
-        stage_stream_source,
-        write_heartbeats,
-    )
     from bugzilla_etl_spark.streaming.snapshot_stream import (
         stream_sessionize_ooo as _op,
     )
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    path = f"{sf_dir}/events.parquet"
-    static = spark.read.parquet(path)
-    srcdir = tracked_mkdtemp(prefix="bes_sesso_")
-    stage_stream_source(path, srcdir)
-    write_heartbeats(path, srcdir)
-    src = normalize_events_ts(
-        spark.readStream.schema(static.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcdir)
-    )
-    src = src.select(
+    src = events_stream(spark, sf_dir, heartbeats=True).select(
         "user_id", "event_id", "ts",
         F.col("ts").cast("long").alias("tsl"),
     )
-    name = f"stream_sesso_{uuid.uuid4().hex[:8]}"
-    q = (
-        _op(src)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", tracked_mkdtemp(prefix="bes_sessoq_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    register_cleanup(partial(spark.catalog.dropTempView, name))
-    q.awaitTermination()
-    return spark.table(name).where(F.col("user_id") >= 0)
+    out = to_memory(_op(src), "append", "stream_sesso_")
+    return out.where(F.col("user_id") >= 0)
 
 
 @register("stream_bug_versions", oracle=_FULL_ORACLE)
@@ -1050,21 +913,10 @@ def stream_bug_versions(
     rebuilt docs into a bucketed store.  The oracle is the full batch
     rebuild over all events — the incremental==full equivalence that
     defines the reference's incremental mode (bz_etl.py:172; any bug
-    touched since the watermark is fully re-built and overwritten).
-
-    Session-scope constraint: the shuffle-partition pin below mutates
-    SESSION-GLOBAL conf for the query's lifetime; a query running
-    concurrently on the same SparkSession during awaitTermination
-    would silently inherit partitions=n_buckets (default 4).  Fine
-    for the single-query
-    harness; concurrent use needs a cloned session
-    (``spark.newSession()``) so the pin scopes to this query."""
-
+    touched since the watermark is fully re-built and overwritten)."""
     from bugzilla_etl_spark.streaming.incremental_versions import (
         stream_full_rebuild,
     )
-
-    from bugzilla_etl_spark.streaming.landing import arrival_mode
 
     ev = load_table(spark, sf_dir, "events")
     work = tracked_mkdtemp(prefix="bes_incv_")
@@ -1096,7 +948,6 @@ def stream_bug_versions(
     # (round-11 advice) — under the knob the newest time slice must
     # be WRITTEN first to actually arrive first; dir names follow
     # write order so mtime- and name-ordered listings agree
-    import os as _os
     import time as _time
 
     mt_base = _time.time()
@@ -1114,15 +965,11 @@ def stream_bug_versions(
         # file source dispatches by mtime, and two slices written
         # inside one mtime granule can invert arrival (the
         # landing._stamp_arrival_order rationale)
-        for f in _os.listdir(f"{src}/slice={pos}"):
+        for f in os.listdir(f"{src}/slice={pos}"):
             p = f"{src}/slice={pos}/{f}"
             t = mt_base + 2 * (pos + 1)
-            _os.utime(p, (t, t))
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src + "/*")
-    )
+            os.utime(p, (t, t))
+    stream = landed_stream(spark, src + "/*", ev.schema)
     # Pin shuffle partitions to the store's bucket count for the
     # query's lifetime (the r13 stream_attribution method): each
     # micro-batch's rebuild runs ~6 shuffle stages over a batch-
@@ -1146,26 +993,18 @@ def stream_bug_versions(
     # fraction << 1 want thousands of buckets so untouched buckets
     # are never read, written, or listed; size n_buckets so a
     # batch's touched-bucket histories fit the executor fleet.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_buckets))
-    try:
-        q = stream_full_rebuild(
+    drain(
+        spark,
+        stream_full_rebuild(
             stream,
             archive_dir=f"{work}/archive",
             docs_dir=f"{work}/docs",
             checkpoint_dir=f"{work}/ckpt",
             build_fn=build_full_docs,
             n_buckets=n_buckets,
-        ).start()
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    # progress for the streambench lane beside the per-phase split
-    # the writer recorded (round-13 verdict task 3: the 17.5 s
-    # marginal needed the attribution pair's progress-split diagnosis)
-    current().stats["progress"] = snapshot(q)
-    import os
-
+        ),
+        state_partitions=n_buckets,
+    )
     if not os.path.exists(f"{work}/docs"):
         # no-new-data run: no micro-batch ever rebuilt an entity —
         # the batch builder on an empty log IS the stream's output
@@ -1394,47 +1233,20 @@ def stream_previous_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch query: streaming must converge to the batch result).
     reference: parse_bug_history.py:783 setPrevious under the
     incremental loop (bz_etl.py:172)."""
-    import os
-    import uuid
-
     from bugzilla_etl_spark.streaming.snapshot_stream import (
         stream_previous_values as _op,
     )
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    path = f"{sf_dir}/events.parquet"
-    static = spark.read.parquet(path)
-    from bugzilla_etl_spark.streaming.landing import (
-        stage_stream_source,
-        stream_reader,
-    )
-
-    srcdir = tracked_mkdtemp(prefix="bes_pv_")
     # _pv_state's contract is IN-ORDER-per-entity delivery; under the
     # arrival-order sweep this entry documents the contract's edge
     # (the sweep expects divergence here) and
     # stream_previous_values_ooo is the watermark-buffered form that
     # retires the assumption.
-    stage_stream_source(path, srcdir)
-    src = normalize_events_ts(stream_reader(spark, static.schema, srcdir))
-    src = src.select(
+    src = events_stream(spark, sf_dir).select(
         "user_id", "event_id", F.col("ts").cast("long").alias("tsl"),
         "event_type", "value",
     )
-    name = f"stream_pv_{uuid.uuid4().hex[:8]}"
-    q = (
-        _op(src)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", tracked_mkdtemp(prefix="bes_pq_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    register_cleanup(partial(spark.catalog.dropTempView, name))
-    q.awaitTermination()
-    return spark.table(name)
+    return to_memory(_op(src), "append", "stream_pv_")
 
 
 @register("stream_previous_values_ooo", oracle=_pv_oracle())
@@ -1453,50 +1265,21 @@ def stream_previous_values_ooo(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch oracle — the property the classic form cannot offer.
     reference: parse_bug_history.py:783 setPrevious under
     out-of-order incremental delivery."""
-    import uuid
-
-    from bugzilla_etl_spark.streaming.landing import (
-        stage_stream_source,
-        write_heartbeats,
-    )
     from bugzilla_etl_spark.streaming.snapshot_stream import (
         stream_previous_values_ooo as _op,
     )
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    path = f"{sf_dir}/events.parquet"
-    static = spark.read.parquet(path)
-    srcdir = tracked_mkdtemp(prefix="bes_pvo_")
-    stage_stream_source(path, srcdir)
-    write_heartbeats(path, srcdir)
-    src = normalize_events_ts(
-        spark.readStream.schema(static.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcdir)
-    )
-    src = src.select(
+    src = events_stream(spark, sf_dir, heartbeats=True).select(
         "user_id", "event_id", "ts",
         F.col("ts").cast("long").alias("tsl"),
         "event_type", "value",
     )
-    name = f"stream_pvo_{uuid.uuid4().hex[:8]}"
-    q = (
-        _op(src)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", tracked_mkdtemp(prefix="bes_pvoq_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    register_cleanup(partial(spark.catalog.dropTempView, name))
-    q.awaitTermination()
+    out = to_memory(_op(src), "append", "stream_pvo_")
     # sentinel rows ride through the stateful op as their own group;
     # filter them on the MATERIALIZED result (in-stream filtering
     # would push below the watermark node — see the operator's
     # docstring)
-    return spark.table(name).where(F.col("user_id") >= 0)
+    return out.where(F.col("user_id") >= 0)
 
 
 @register(
@@ -1550,29 +1333,26 @@ def stream_heavy_hitters(
 
     Explode and partial-count stay map-side; update mode re-emits a
     key only in batches that changed it, and counts are monotone
-    per key, so the final state is each key's max emission."""
-    import os
-    import uuid
+    per key, so the final state is each key's max emission.
 
-    from pyspark.sql import Window
-
+    ``state_partitions`` pins the STREAM's state-store count (see
+    ``landing.drain``): the capped form's state is <= 2^k rows total,
+    so its streaming aggregate is commit-bound, not compute-bound, and
+    fewer stores mean fewer per-batch delta-file commits.  The EXACT
+    form keeps corpus-cardinality state and must NOT be pinned.  The
+    post-stream ranking and re-verify passes run after the restore,
+    at session partitioning."""
     from bugzilla_etl_spark.functions.hashing import hash64
     from bugzilla_etl_spark.operators import text as T
 
     path = f"{sf_dir}/documents.parquet"
     static = spark.read.parquet(path)
-    from bugzilla_etl_spark.streaming.landing import stage_stream_source
-
     srcdir = tracked_mkdtemp(prefix="bes_shh_")
     # documents carry no event time: under the arrival knob the
     # staging shards by doc_id — arbitrary order, which this
     # un-watermarked commutative count must tolerate outright
     stage_stream_source(path, srcdir, ts_col=None, id_col="doc_id")
-    src = (
-        spark.readStream.schema(static.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcdir)
-    )
+    src = landed_stream(spark, srcdir, static.schema)
     grams = src.select(
         F.explode(T.ngrams(T.tokens("text"), 3)).alias("ngram")
     )
@@ -1584,42 +1364,14 @@ def stream_heavy_hitters(
         group_col = "bucket"
     else:
         group_col = "ngram"
-    name = f"stream_hh_{uuid.uuid4().hex[:8]}"
-    # ``state_partitions``: pin spark.sql.shuffle.partitions for the
-    # STREAM ONLY (the stream_attribution / stream_bug_versions
-    # method, restore-guarded) — the capped form's state is <= 2^k
-    # rows total, so the streaming aggregate is commit-bound, not
-    # compute-bound: fewer state stores = fewer per-batch delta-file
-    # commits.  JVM-native stateful only (the batch-4 scoping rule);
-    # the EXACT form keeps corpus-cardinality state and must NOT be
-    # pinned.  The post-stream ranking/re-verify passes run after the
-    # restore, at session partitioning.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = (
-            grams.groupBy(group_col)
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .option(
-                "checkpointLocation", tracked_mkdtemp(prefix="bes_shh_ck_")
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        register_cleanup(partial(spark.catalog.dropTempView, name))
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    out = spark.table(name)
-    w = Window.partitionBy(group_col).orderBy(F.col("cnt").desc())
-    final = (
-        out.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .select(group_col, "cnt")
+    out = to_memory(
+        grams.groupBy(group_col).agg(F.count(F.lit(1)).alias("cnt")),
+        "update",
+        "stream_hh_",
+        state_partitions,
+    )
+    final = dedup_latest(out, group_col, ts="cnt", tiebreak=()).select(
+        group_col, "cnt"
     )
     if keyspace_bits is None:
         return final.orderBy(
@@ -1765,12 +1517,9 @@ def stream_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     (streaming/neardup_stream.py), so the oracle is the pure batch
     computation: each incoming doc's band-bucket collision count
     against the static index."""
-    import shutil
-
-    from bugzilla_etl_spark.streaming.landing import land_parts
     from bugzilla_etl_spark.streaming.neardup_stream import (
         band_index,
-        run_neardup_ingest,
+        screen_batch,
     )
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1778,9 +1527,6 @@ def stream_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     incoming = docs.where(F.col("doc_id") % 5 == 0)
 
     landing = tracked_mkdtemp(prefix="bes_ndl_")
-    out_dir = tracked_mkdtemp(prefix="bes_ndo_")
-    ckpt = tracked_mkdtemp(prefix="bes_ndc_")
-    shutil.rmtree(out_dir)
     land_parts(
         landing,
         [
@@ -1788,20 +1534,16 @@ def stream_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             ("incoming_b", incoming.where(F.col("doc_id") % 10 == 5)),
         ],
     )
-
     index = band_index(static).persist()
     index.count()  # materialize once; both micro-batches reuse it
     try:
-        run_neardup_ingest(
-            spark, landing, docs.schema, index, out_dir, ckpt
+        return to_batch_dirs(
+            spark,
+            landing,
+            docs.schema,
+            lambda batch: screen_batch(batch, index),
+            "doc_id long, n_hits long, is_neardup int",
         )
-        from bugzilla_etl_spark.streaming.landing import (
-            read_store_or_empty,
-        )
-
-        return read_store_or_empty(
-            spark, out_dir, "doc_id long, n_hits long, is_neardup int"
-        ).select("doc_id", "n_hits", "is_neardup")
     finally:
         index.unpersist()
 
@@ -1826,24 +1568,15 @@ def stream_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     no state), so ANY arrival order converges; under the
     order-sweep knob the parts land newest-first — content order
     and landing names/mtimes move together, so delivery order
-    really reverses (the round-11 stream_bug_versions lesson)."""
-    import shutil
+    really reverses (the round-11 stream_bug_versions lesson).
 
-    from bugzilla_etl_spark.streaming.chunk_stream import (
-        run_chunk_ingest,
-    )
-    from bugzilla_etl_spark.streaming.landing import (
-        arrival_mode,
-        land_parts,
-        read_store_or_empty,
-    )
+    Scale shape per micro-batch: chunking is a pure map (scan ->
+    project -> generate), so the batch entry's zero-shuffle plan pin
+    holds for every micro-batch plan too."""
+    from bugzilla_etl_spark.operators.text import chunk_passages
 
     docs = load_table(spark, sf_dir, "documents")
     landing = tracked_mkdtemp(prefix="bes_chl_")
-    out_dir = tracked_mkdtemp(prefix="bes_cho_")
-    ckpt = tracked_mkdtemp(prefix="bes_chk_")
-    shutil.rmtree(out_dir)
-
     order = list(range(3))
     if arrival_mode() is not None:
         order.reverse()
@@ -1857,21 +1590,14 @@ def stream_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
             for pos in range(3)
         ],
     )
-    run_chunk_ingest(
+    return to_batch_dirs(
         spark,
         landing,
         docs.schema,
-        out_dir,
-        ckpt,
-        width=_CHUNK_W,
-        stride=_CHUNK_S,
-    )
-    return read_store_or_empty(
-        spark,
-        out_dir,
+        lambda batch: chunk_passages(batch, width=_CHUNK_W, stride=_CHUNK_S),
         "doc_id long, chunk_idx long, tok_start long,"
         " tok_end long, chunk_text string",
-    ).select("doc_id", "chunk_idx", "tok_start", "tok_end", "chunk_text")
+    )
 
 
 @register(
@@ -1926,7 +1652,6 @@ def stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     writes.  Oracle = the BATCH register computation over all
     events: streaming == batch because the registers merge exactly
     (the property the batch unit test pins)."""
-    import os
     import shutil
 
     from bugzilla_etl_spark.plans.queries_engine import (
@@ -1934,11 +1659,9 @@ def stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
         hll_register_frame,
     )
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    apply_conf(spark, {"spark.sql.legacy.parquet.nanosAsLong": "true"})
     path = f"{sf_dir}/events.parquet"
     static = spark.read.parquet(path)
-    from bugzilla_etl_spark.streaming.landing import stage_stream_source
-
     landing = tracked_mkdtemp(prefix="bes_hll_")
     # copies=2: the same rows again — a REPLAY; max-merge absorbs it,
     # which is exactly the claim under test (and under the arrival
@@ -1976,21 +1699,12 @@ def stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
             pdf, schema="event_type string, b long, m int"
         ).coalesce(1).write.mode("overwrite").parquet(state_path)
 
-    q = (
-        spark.readStream.schema(static.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
+    drain(
+        spark,
+        landed_stream(spark, landing, static.schema)
         .writeStream.foreachBatch(fold)
-        .option(
-            "checkpointLocation", tracked_mkdtemp(prefix="bes_hllc_")
-        )
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", tracked_mkdtemp(prefix="bes_hllc_"))
     )
-    q.awaitTermination()
-
-    from bugzilla_etl_spark.streaming.landing import read_store_or_empty
-
     final_regs = read_store_or_empty(
         spark, state_path, "event_type string, b long, m int"
     )
@@ -2068,7 +1782,38 @@ def stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL oracle (the same interval join, streaming == batch) hashes
     identically.  The gap column divides epoch-µs integers, never
     floats."""
-    clicks, purchases = _attribution_streams(spark, sf_dir)
+    return to_memory(
+        _attribution_join(spark, sf_dir, "inner"),
+        "append",
+        "stream_att_",
+        _ATT_STATE_PARTITIONS,
+    )
+
+
+# State-store count of the attribution joins (``landing.drain``'s
+# ``state_partitions``).  The stream-stream join keeps FOUR stores per
+# partition, each loading and committing a delta file every
+# micro-batch.  Round-13 progress metrics showed the cost: at the
+# session default 32, the inner join paid 512 store commits per run
+# summing to 310 s of (heavily lock-contended) commit time against
+# 15.6 s of addBatch wall, for ~13.5k state rows.  Production
+# watermarked joins size this to watermark-horizon x arrival rate;
+# the demo corpus holds ~6 MB of state.  r16 commit-fan-out sweep on
+# the inner join (interleaved min-of-3, noisy-IO host): 8 -> 7.44 s,
+# 4 -> 5.69 s, 2 -> 5.20 s; 4 is the measured optimum band (2 is
+# within noise of 4 and leaves no parallel headroom for fatter
+# states).  Results are partition-count-independent (the determinism
+# sweep's contract) — only commit fan-out changes.
+_ATT_STATE_PARTITIONS = 4
+
+
+def _attribution_join(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
+    """The purchase-click interval join (``how`` = inner or
+    leftOuter) over ``_attribution_streams``; the outer form lands
+    the heartbeat sentinels its flush needs."""
+    clicks, purchases = _attribution_streams(
+        spark, sf_dir, sentinel=how != "inner"
+    )
     joined = purchases.join(
         clicks,
         (purchases.user_id == clicks.user_id)
@@ -2077,9 +1822,9 @@ def stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             clicks.click_ts
             >= purchases.purchase_ts - F.expr("INTERVAL 1 HOUR")
         ),
-        "inner",
+        how,
     )
-    out = joined.select(
+    return joined.select(
         purchases.user_id,
         "purchase_id",
         "click_id",
@@ -2088,7 +1833,6 @@ def stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             " div 1000000"
         ).alias("gap_s"),
     )
-    return _run_attribution(spark, out)
 
 
 def _attribution_streams(
@@ -2160,79 +1904,13 @@ def _attribution_streams(
                 )
         land_parts(landing, parts)
         dirs[name] = (landing, df.schema)
-    clicks = (
-        spark.readStream.schema(dirs["click"][1])
-        .option("maxFilesPerTrigger", 1)
-        .parquet(dirs["click"][0])
-        .withWatermark("click_ts", "2 hours")
+    clicks = landed_stream(spark, *dirs["click"]).withWatermark(
+        "click_ts", "2 hours"
     )
-    purchases = (
-        spark.readStream.schema(dirs["purchase"][1])
-        .option("maxFilesPerTrigger", 1)
-        .parquet(dirs["purchase"][0])
-        .withWatermark("purchase_ts", "2 hours")
+    purchases = landed_stream(spark, *dirs["purchase"]).withWatermark(
+        "purchase_ts", "2 hours"
     )
     return clicks, purchases
-
-
-def _run_attribution(
-    spark: SparkSession, out, state_partitions: int = 4
-) -> DataFrame:
-    """Run an attribution join to a memory sink (availableNow,
-    one real micro-batch per landed file) and return the table.
-
-    ``state_partitions`` pins ``spark.sql.shuffle.partitions`` for
-    the streaming query's lifetime (restored after), because for a
-    STATEFUL stream that conf is the state-store count — fixed at
-    checkpoint creation, and the stream-stream join keeps FOUR
-    stores per partition, every one of which loads and commits a
-    delta file EVERY micro-batch whether or not it holds data.
-    Round-13 progress metrics showed exactly that cost: at the
-    session default 32, the inner join paid 512 store commits per
-    run summing to 310 s of (heavily lock-contended) commit time
-    against 15.6 s of addBatch wall, for ~13.5k state rows — state
-    sized to the batch default instead of to the state.  Production
-    watermarked joins size this knob to watermark-horizon x arrival
-    rate; the demo corpus holds ~6 MB of state, so even 8
-    partitions (32 stores/batch) is generous.  r16 commit-fan-out
-    sweep on the inner join (interleaved min-of-3, noisy-IO host):
-    8 -> 7.44 s, 4 -> 5.69 s, 2 -> 5.20 s — the default moves to
-    the measured optimum band (4; 2 is within noise of 4 and
-    leaves no parallel headroom for fatter states).  Results are
-    partition-count-independent (the determinism sweep's contract)
-    — only commit fan-out changes.
-
-    The finished query's progress summary (state rows/memory,
-    per-batch durationMs components incl. per-operator
-    commitTimeMs) is stored as the run's ``stats["progress"]`` so
-    the streambench lane can embed it — the r12 interval-join
-    re-pin taught that a wall-clock step with no recorded
-    state/commit metrics cannot be root-caused after the fact."""
-    import uuid
-
-    name = f"stream_att_{uuid.uuid4().hex[:8]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(state_partitions)
-    )
-    try:
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option(
-                "checkpointLocation",
-                tracked_mkdtemp(prefix="bes_att_ck_"),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        register_cleanup(partial(spark.catalog.dropTempView, name))
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    current().stats["progress"] = snapshot(q)
-    return spark.table(name)
 
 
 @register(
@@ -2287,29 +1965,13 @@ def stream_attribution_outer(
     watermark accumulator ever saw them — silently disabling the
     flush they exist to provide (observed: watermark pinned at
     max−2h, the final window's null rows never emitted)."""
-    clicks, purchases = _attribution_streams(
-        spark, sf_dir, sentinel=True
+    out = to_memory(
+        _attribution_join(spark, sf_dir, "leftOuter"),
+        "append",
+        "stream_att_",
+        _ATT_STATE_PARTITIONS,
     )
-    joined = purchases.join(
-        clicks,
-        (purchases.user_id == clicks.user_id)
-        & (clicks.click_ts <= purchases.purchase_ts)
-        & (
-            clicks.click_ts
-            >= purchases.purchase_ts - F.expr("INTERVAL 1 HOUR")
-        ),
-        "leftOuter",
-    )
-    out = joined.select(
-        purchases.user_id,
-        "purchase_id",
-        "click_id",
-        F.expr(
-            "(unix_micros(purchase_ts) - unix_micros(click_ts))"
-            " div 1000000"
-        ).alias("gap_s"),
-    )
-    return _run_attribution(spark, out).where(F.col("user_id") != -1)
+    return out.where(F.col("user_id") != -1)
 
 
 from bugzilla_etl_spark.plans.queries_dedup import (  # noqa: E402
@@ -2377,7 +2039,6 @@ def stream_dedup_spans(
     >= 1e9 distinct-grams setting) — threaded through index build
     AND probe; oracle-checked at both widths via
     stream_dedup_spans_oracle (r14 verdict task 5)."""
-    import shutil
     import uuid
 
     from bugzilla_etl_spark.operators.dedup import (
@@ -2386,19 +2047,12 @@ def stream_dedup_spans(
         spans_from_hits,
         write_gram_index,
     )
-    from bugzilla_etl_spark.streaming.landing import (
-        land_parts,
-        read_store_or_empty,
-    )
 
     docs = load_table(spark, sf_dir, "documents")
     static = docs.where(F.col("doc_id") % 2 == 0)
     incoming = docs.where(F.col("doc_id") % 2 == 1)
 
     landing = tracked_mkdtemp(prefix="bes_sds_")
-    out_dir = tracked_mkdtemp(prefix="bes_sdso_")
-    ckpt = tracked_mkdtemp(prefix="bes_sdsc_")
-    shutil.rmtree(out_dir)
     land_parts(
         landing,
         [
@@ -2421,45 +2075,31 @@ def stream_dedup_spans(
         )
         ref.count()  # materialize once; both micro-batches reuse it
 
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def spans(batch: DataFrame) -> DataFrame:
         if index_mode == "bucketed":
-            hits = probe_gram_index(ref, batch_df, hash_bits=hash_bits)
+            hits = probe_gram_index(ref, batch, hash_bits=hash_bits)
         else:
             hits = (
-                gram_positions(batch_df, hash_bits=hash_bits)
+                gram_positions(batch, hash_bits=hash_bits)
                 .join(ref, "gh")
                 .select("doc_id", "pos")
             )
-        spans_from_hits(hits).write.mode("overwrite").parquet(
-            f"{out_dir}/batch={batch_id}"
-        )
+        return spans_from_hits(hits)
 
     try:
-        q = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(landing)
-            .writeStream.foreachBatch(handle)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return read_store_or_empty(
+        return to_batch_dirs(
             spark,
-            out_dir,
+            landing,
+            docs.schema,
+            spans,
             "doc_id long, span_start int, span_end int,"
             " span_tokens int, n_dup_grams long",
-        ).select(
-            "doc_id", "span_start", "span_end", "span_tokens", "n_dup_grams"
         )
     finally:
         if index_mode == "bucketed":
-            # result rows are materialized parquet under out_dir, so
-            # the catalog entry can drop now (data dir is GC'd with
-            # the tempdir registry)
+            # result rows are materialized parquet under the batch
+            # dirs, so the catalog entry can drop now (data dir is
+            # GC'd with the tempdir registry)
             spark.sql(f"DROP TABLE IF EXISTS {idx_name}")
         else:
             ref.unpersist()
@@ -2523,16 +2163,9 @@ def stream_bpe_encode(
     save → load → encode path every invocation.
     reference scope: training-data pipeline extension (ingest-twin
     pattern; pairs with #188)."""
-    import shutil
-
     from bugzilla_etl_spark.operators.text import (
         load_tokenizer,
         save_tokenizer,
-    )
-    from bugzilla_etl_spark.streaming.landing import (
-        arrival_mode,
-        land_parts,
-        read_store_or_empty,
     )
 
     docs = load_table(spark, sf_dir, "documents")
@@ -2550,9 +2183,6 @@ def stream_bpe_encode(
     tok_map.count()
 
     landing = tracked_mkdtemp(prefix="bes_sbe_")
-    out_dir = tracked_mkdtemp(prefix="bes_sbeo_")
-    ckpt = tracked_mkdtemp(prefix="bes_sbec_")
-    shutil.rmtree(out_dir)
     order = [0, 1]
     if arrival_mode() is not None:
         order.reverse()
@@ -2566,30 +2196,13 @@ def stream_bpe_encode(
             for pos in range(2)
         ],
     )
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        bpe_encode_docs(batch_df, tok_map, unk=True).write.mode(
-            "overwrite"
-        ).parquet(f"{out_dir}/batch={batch_id}")
-
     try:
-        q = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(landing)
-            .writeStream.foreachBatch(handle)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return read_store_or_empty(
+        return to_batch_dirs(
             spark,
-            out_dir,
-            "doc_id long, n_terms long, n_tokens long,"
-            " token_ids string",
-        ).select("doc_id", "n_terms", "n_tokens", "token_ids")
+            landing,
+            docs.schema,
+            lambda batch: bpe_encode_docs(batch, tok_map, unk=True),
+            "doc_id long, n_terms long, n_tokens long, token_ids string",
+        )
     finally:
         tok_map.unpersist()

@@ -1030,9 +1030,7 @@ def stream_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-sized by the sketch contract (2048 words regardless
     of eval size), and per-batch work is map-only: zero shuffles,
     zero stream state beyond the source offsets."""
-    import shutil
-
-    from bugzilla_etl_spark.streaming.landing import land_parts
+    from bugzilla_etl_spark.streaming.landing import land_parts, to_batch_dirs
 
     docs = load_table(spark, sf_dir, "documents")
     ev = docs.where(F.col("doc_id") % 20 == 0)
@@ -1040,9 +1038,6 @@ def stream_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     words = D.bloom_build(ev)
 
     landing = tracked_mkdtemp(prefix="bes_sdc_")
-    out_dir = tracked_mkdtemp(prefix="bes_sdo_")
-    ckpt = tracked_mkdtemp(prefix="bes_sdk_")
-    shutil.rmtree(out_dir)
     land_parts(
         landing,
         [
@@ -1050,31 +1045,13 @@ def stream_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
             ("incoming_b", tr.where(F.col("doc_id") % 2 == 1)),
         ],
     )
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        D.bloom_probe(batch_df, words).write.mode("overwrite").parquet(
-            f"{out_dir}/batch={batch_id}"
-        )
-
-    q = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-        .writeStream.foreachBatch(handle)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    from bugzilla_etl_spark.streaming.landing import read_store_or_empty
-
-    return read_store_or_empty(
+    return to_batch_dirs(
         spark,
-        out_dir,
+        landing,
+        docs.schema,
+        lambda batch: D.bloom_probe(batch, words),
         "doc_id long, n_shingles long, n_hits long, flagged int",
-    ).select("doc_id", "n_shingles", "n_hits", "flagged")
+    )
 
 
 # Sign-safe integer division shared by both engines: DuckDB's // is

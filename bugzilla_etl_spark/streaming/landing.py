@@ -1,10 +1,21 @@
-"""Landing-dir helper for the file-source streaming queries.
+"""Staging and the availableNow runner for the streaming catalog entries.
 
-One copy of the write-one-file-per-part staging dance (repartition ->
-temp dir -> rename into the landing dir) that stream_neardup_ingest,
-stream_decontam, and stream_attribution each need: under
-``maxFilesPerTrigger=1`` each landed file becomes one real
-micro-batch, which is what makes their streaming == batch oracles
+Every streaming entry is one bounded Structured Streaming run: stage a
+source directory, start the query under the availableNow trigger,
+await termination, read what the sink holds.  This module owns all of
+it, so an entry states only its operator and its sink:
+
+- staging: ``land_parts`` (one parquet file per part, arrival order
+  written as mtimes), ``stage_stream_source`` (the events/documents
+  file under the ``BES_STREAM_ARRIVAL`` disorder knob),
+  ``write_heartbeats``, ``events_stream`` and ``landed_stream`` (one
+  landed file per micro-batch);
+- the runner: ``drain`` (trigger, state-partition pin, start, await,
+  progress summary) and its two sinks, ``to_memory`` and
+  ``to_batch_dirs``.
+
+Under ``maxFilesPerTrigger=1`` each landed file becomes one real
+micro-batch, which is what makes the streaming == batch oracles
 meaningful multi-batch runs instead of single-shot reads.
 """
 
@@ -12,8 +23,19 @@ from __future__ import annotations
 
 import os
 import shutil
+import uuid
+from functools import partial
 
 from pyspark.sql import DataFrame
+
+from bugzilla_etl_spark.sources.tables import normalize_events_ts
+from bugzilla_etl_spark.streaming.progress import snapshot
+from bugzilla_etl_spark.tmpdirs import (
+    apply_conf,
+    current,
+    register_cleanup,
+    tracked_mkdtemp,
+)
 
 
 def land_parts(landing: str, parts: list[tuple[str, DataFrame]]) -> None:
@@ -115,8 +137,6 @@ def read_store_or_empty(spark, path: str, schema: str):
     empty, every write was skipped, and the directory simply does
     not exist.  Callers declare the exact schema the stream's
     writer produces so empty-input runs stay schema-stable."""
-    import os
-
     if not os.path.exists(path):
         return spark.createDataFrame([], schema=schema)
     return spark.read.parquet(path)
@@ -148,8 +168,6 @@ def arrival_mode() -> tuple[int, int] | None:
     consumer's watermark delay (2h) minus the in-flight slack — the
     sweep's point is bounded disorder the watermark contract admits,
     not data loss."""
-    import os
-
     raw = os.environ.get(ARRIVAL_ENV, "").strip()
     if not raw:
         return None
@@ -177,8 +195,6 @@ def stage_stream_source(
     event-time lateness).  Files are written in arrival order and
     named in arrival order, so both mtime- and name-ordered source
     listings agree."""
-    import os
-
     mode = arrival_mode()
     if mode is None:
         if copies == 1:
@@ -243,16 +259,6 @@ def stage_stream_source(
     _stamp_arrival_order(srcdir, written)
 
 
-def stream_reader(spark, schema, srcdir: str):
-    """readStream for a staged source dir: one file per trigger when
-    the arrival knob is active (each scrambled part = one REAL
-    micro-batch), plain single-batch read otherwise."""
-    reader = spark.readStream.schema(schema)
-    if arrival_mode() is not None:
-        reader = reader.option("maxFilesPerTrigger", 1)
-    return reader.parquet(srcdir)
-
-
 def write_heartbeats(path: str, srcdir: str, user_col: str = "user_id",
                      ts_col: str = "ts") -> None:
     """Append ONE far-future heartbeat part file (two sentinel rows,
@@ -272,8 +278,6 @@ def write_heartbeats(path: str, srcdir: str, user_col: str = "user_id",
     mtime-dispatched file source).  Consumers filter
     ``user_col >= 0``."""
     import datetime
-    import os
-
     import pyarrow as pa
     import pyarrow.dataset as ds_
     import pyarrow.parquet as pq
@@ -305,3 +309,136 @@ def write_heartbeats(path: str, srcdir: str, user_col: str = "user_id",
         os.path.join(srcdir, "zz_hb1.parquet"),
     )
     _stamp_arrival_order(srcdir, ["zz_hb1.parquet"])
+
+
+# ---------------------------------------------------------------------
+# The availableNow runner
+
+
+def events_stream(
+    spark, sf_dir: str, copies: int = 1, heartbeats: bool = False
+) -> DataFrame:
+    """File-source stream over ``{sf_dir}/events.parquet``, staged into
+    a tracked dir by ``stage_stream_source`` (``copies`` > 1 lands
+    replays) with ``ts`` normalized the way ``load_table`` does it.
+    The file source requires a DIRECTORY and the tables are single
+    files; in production this is the landing dir the extractor drops
+    incremental batches into.
+    ``heartbeats`` appends ``write_heartbeats``' far-future part.  The
+    stream reads one file per trigger when heartbeats are landed (the
+    tail must arrive after every real part) or the arrival knob is on
+    (each scrambled part is one real micro-batch), and everything in
+    one batch otherwise."""
+    # the confs load_table pins (nanos-as-long for the raw schema, UTC
+    # for the ntz -> instant cast), released with the current scope
+    apply_conf(
+        spark,
+        {
+            "spark.sql.session.timeZone": "UTC",
+            "spark.sql.legacy.parquet.nanosAsLong": "true",
+        },
+    )
+    path = f"{sf_dir}/events.parquet"
+    srcdir = tracked_mkdtemp(prefix="bes_evs_")
+    stage_stream_source(path, srcdir, copies=copies)
+    if heartbeats:
+        write_heartbeats(path, srcdir)
+    schema = spark.read.parquet(path).schema
+    if heartbeats or arrival_mode() is not None:
+        src = landed_stream(spark, srcdir, schema)
+    else:
+        src = spark.readStream.schema(schema).parquet(srcdir)
+    return normalize_events_ts(src)
+
+
+def landed_stream(spark, landing: str, schema) -> DataFrame:
+    """File-source stream over ``landing`` that reads one file per
+    trigger, so each landed part is one micro-batch."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(landing)
+    )
+
+
+def drain(spark, writer, state_partitions: int | None = None):
+    """Run ``writer``, a stream of ``spark``, to completion under the
+    availableNow trigger and return the terminated query.  Its
+    ``progress.snapshot`` becomes the current run's
+    ``stats["progress"]``.
+
+    ``state_partitions`` sets ``spark.sql.shuffle.partitions`` on
+    ``spark`` from start to termination and restores it after, error
+    included.  For a stateful stream that conf is the state-store
+    count, fixed when the checkpoint is created, and every store loads
+    and commits a delta file every micro-batch whether or not it holds
+    rows; callers size it to the state rather than to the session
+    default.
+
+    Session-scope constraint: the pin is SESSION-GLOBAL conf while the
+    stream runs, so a query running concurrently on the same
+    SparkSession would silently inherit it.  Fine for one query at a
+    time; concurrent use needs a cloned session (``spark.newSession()``)
+    so the pin scopes to the stream."""
+    writer = writer.trigger(availableNow=True)
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    if state_partitions is not None:
+        spark.conf.set(key, str(state_partitions))
+    try:
+        q = writer.start()
+        q.awaitTermination()
+    finally:
+        spark.conf.set(key, prev)
+    current().stats["progress"] = snapshot(q)
+    return q
+
+
+def to_memory(
+    frame: DataFrame,
+    mode: str,
+    view_prefix: str,
+    state_partitions: int | None = None,
+) -> DataFrame:
+    """Drain ``frame`` into a memory sink in output ``mode`` and return
+    the sink's table.  The view (``<view_prefix><8 hex>``) and the
+    checkpoint are released with the current run, error included."""
+    spark = frame.sparkSession
+    name = f"{view_prefix}{uuid.uuid4().hex[:8]}"
+    register_cleanup(partial(spark.catalog.dropTempView, name))
+    drain(
+        spark,
+        frame.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(mode)
+        .option("checkpointLocation", tracked_mkdtemp(prefix="bes_memck_")),
+        state_partitions,
+    )
+    return spark.table(name)
+
+
+def to_batch_dirs(
+    spark, landing: str, in_schema, fn, out_schema: str
+) -> DataFrame:
+    """Drain ``landed_stream(spark, landing, in_schema)`` through
+    foreachBatch: each non-empty micro-batch's ``fn(batch)`` overwrites
+    ``{out}/batch=<id>`` in a tracked dir, so a checkpoint replay lands
+    the same batch in the same dir and is idempotent.  Returns the
+    store's ``out_schema`` columns, or an empty ``out_schema`` frame
+    when no batch wrote."""
+    out = tracked_mkdtemp(prefix="bes_bd_")
+    os.rmdir(out)  # absent until a batch writes: read_store_or_empty
+
+    def handle(batch: DataFrame, batch_id: int) -> None:
+        if batch.isEmpty():
+            return
+        fn(batch).write.mode("overwrite").parquet(f"{out}/batch={batch_id}")
+
+    drain(
+        spark,
+        landed_stream(spark, landing, in_schema)
+        .writeStream.foreachBatch(handle)
+        .option("checkpointLocation", tracked_mkdtemp(prefix="bes_bdck_")),
+    )
+    cols = [c.split()[0] for c in out_schema.split(",")]
+    return read_store_or_empty(spark, out, out_schema).select(*cols)

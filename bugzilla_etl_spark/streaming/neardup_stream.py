@@ -16,10 +16,9 @@ same code), posexplodes to (band_id, band_key) — batch-sized, not
 corpus-sized — and joins the static index on the band key.  The
 index side scans pre-bucketed storage in production; at 100 TB it is
 corpus×4 skinny rows, joined on its own key, never broadcast.  The
-output dir is batch-keyed (``batch=<id>`` overwritten per batch), so
-checkpoint replays are idempotent — the same batch lands in the same
-dir, exactly like the bucketed doc-store swap in
-incremental_versions.
+stream_neardup_ingest entry drains ``screen_batch`` through
+``landing.to_batch_dirs``, whose batch-keyed output dirs make
+checkpoint replays idempotent.
 """
 
 from __future__ import annotations
@@ -78,35 +77,3 @@ def screen_batch(batch: DataFrame, index: DataFrame) -> DataFrame:
         n_hits.cast("long").alias("n_hits"),
         F.when(n_hits > 0, 1).otherwise(0).alias("is_neardup"),
     )
-
-
-def run_neardup_ingest(
-    spark,
-    landing_dir: str,
-    schema,
-    index: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-) -> None:
-    """availableNow streaming run: file source over ``landing_dir``
-    (one file per trigger → real multi-batch execution), each batch
-    screened via ``screen_batch`` and written to a batch-keyed dir
-    (idempotent under checkpoint replay)."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        screen_batch(batch_df, index).write.mode("overwrite").parquet(
-            f"{out_dir}/batch={batch_id}"
-        )
-
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing_dir)
-        .writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

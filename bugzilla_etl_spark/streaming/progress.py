@@ -11,10 +11,12 @@ compact dict: micro-batch count, input rows, state rows/memory, and
 the summed ``durationMs`` components (``addBatch`` = data work;
 ``walCommit``/``commitOffsets``/state commit = checkpoint IO — the
 component that moves under host commit-latency contention while
-data work stands still).  Entry runners store it as the current
-run's ``stats["progress"]`` (see ``tmpdirs``); tools/streambench.py
-embeds the winning pass's snapshot in its JSON line, so a step
-change in the streaming lane carries its own attribution.
+data work stands still).  ``landing.drain`` stores it as the current
+run's ``stats["progress"]`` (see ``tmpdirs``) for every stream it
+runs, so every streaming catalog entry records one;
+tools/streambench.py embeds the winning pass's snapshot in its JSON
+line, so a step change in the streaming lane carries its own
+attribution.
 """
 
 from __future__ import annotations

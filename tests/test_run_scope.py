@@ -17,6 +17,7 @@ import pytest
 
 from bugzilla_etl_spark import tmpdirs
 from bugzilla_etl_spark.plans import catalog
+from tools.streambench import STREAMING
 
 KEY = catalog.PARALLELISM_FIRST
 
@@ -130,3 +131,57 @@ def test_memory_sink_view_dropped_when_run_ends(spark, sf_dir):
         assert run.frame.count() > 0
         assert len(_snap_views(spark)) == 1
     assert not _snap_views(spark)
+
+
+@pytest.mark.parametrize("name", STREAMING)
+def test_every_stream_records_progress(spark, sf_dir, name):
+    """Every streaming entry drains through ``landing.drain``, so its
+    run's stats carry the progress summary of a finished query."""
+    with catalog.run(name, spark, sf_dir) as run:
+        pass
+    assert run.stats["progress"]["batches"] >= 1
+
+
+@pytest.mark.parametrize("new_session", [False, True])
+def test_drain_restores_partitions_and_dirs_when_the_batch_raises(
+    spark, tmp_path, new_session
+):
+    """A failing stream still restores the state-partition pin on the
+    session it ran on, leaves every other session's value alone, still
+    leaves its dirs to the scope, and re-raises."""
+    from bugzilla_etl_spark.streaming.landing import drain, landed_stream
+
+    key = "spark.sql.shuffle.partitions"
+    src = str(tmp_path / "src")
+    spark.range(3).coalesce(1).write.parquet(src)
+    session = spark
+    if new_session:
+        session = spark.newSession()
+        session.conf.set(key, "3")
+    before = {s: s.conf.get(key) for s in (spark, session)}
+    assert "2" not in before.values()
+    seen = []
+
+    def boom(batch, batch_id):
+        seen.append((batch.sparkSession.conf.get(key), spark.conf.get(key)))
+        raise RuntimeError("batch function failed")
+
+    made = []
+    with pytest.raises(Exception, match="batch function failed"):
+        with tmpdirs.scope("raises"):
+            try:
+                drain(
+                    session,
+                    landed_stream(session, src, "id long")
+                    .writeStream.foreachBatch(boom)
+                    .option(
+                        "checkpointLocation",
+                        tmpdirs.tracked_mkdtemp(prefix="bes_raisesck_"),
+                    ),
+                    state_partitions=2,
+                )
+            finally:
+                made = tmpdirs.registered()
+    assert seen == [("2", before[spark] if new_session else "2")]
+    assert {s: s.conf.get(key) for s in before} == before
+    assert made and not any(os.path.exists(d) for d in made)

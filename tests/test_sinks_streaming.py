@@ -618,13 +618,15 @@ def test_neardup_ingest_multibatch_and_replay(spark, sf_dir, tmp_path):
     checkpoint produces identical screening), and batch results must
     equal the batch-computed screen of the same docs."""
     import os
+    import re
 
     from pyspark.sql import functions as F
 
+    from bugzilla_etl_spark import tmpdirs
     from bugzilla_etl_spark.sources import load_table
+    from bugzilla_etl_spark.streaming.landing import to_batch_dirs
     from bugzilla_etl_spark.streaming.neardup_stream import (
         band_index,
-        run_neardup_ingest,
         screen_batch,
     )
 
@@ -647,31 +649,35 @@ def test_neardup_ingest_multibatch_and_replay(spark, sf_dir, tmp_path):
             os.path.join(landing, f"in_{tag}.parquet"),
         )
     index = band_index(static).persist()
-    out1 = str(tmp_path / "out1")
-    run_neardup_ingest(
-        spark, landing, docs.schema, index, out1, str(tmp_path / "ck1")
-    )
-    batches = sorted(
-        d for d in os.listdir(out1) if d.startswith("batch=")
-    )
-    assert len(batches) == 2, batches  # maxFilesPerTrigger=1 honored
-    got = {
-        (r.doc_id, r.n_hits, r.is_neardup)
-        for r in spark.read.parquet(out1).collect()
-    }
-    want = {
-        (r.doc_id, r.n_hits, r.is_neardup)
-        for r in screen_batch(incoming, index).collect()
-    }
-    assert got == want
-    # replay with a fresh checkpoint: identical output
-    out2 = str(tmp_path / "out2")
-    run_neardup_ingest(
-        spark, landing, docs.schema, index, out2, str(tmp_path / "ck2")
-    )
-    got2 = {
-        (r.doc_id, r.n_hits, r.is_neardup)
-        for r in spark.read.parquet(out2).collect()
-    }
+
+    def ingest():
+        # a fresh stream and sink per call: a fresh checkpoint
+        return to_batch_dirs(
+            spark,
+            landing,
+            docs.schema,
+            lambda batch: screen_batch(batch, index),
+            "doc_id long, n_hits long, is_neardup int",
+        )
+
+    with tmpdirs.scope("neardup_ingest"):
+        out1 = ingest()
+        batches = {
+            re.search(r"/batch=(\d+)/", f).group(1)
+            for f in out1.inputFiles()
+        }
+        assert len(batches) == 2, batches  # maxFilesPerTrigger=1 honored
+        got = {
+            (r.doc_id, r.n_hits, r.is_neardup) for r in out1.collect()
+        }
+        want = {
+            (r.doc_id, r.n_hits, r.is_neardup)
+            for r in screen_batch(incoming, index).collect()
+        }
+        assert got == want
+        # replay with a fresh checkpoint: identical output
+        got2 = {
+            (r.doc_id, r.n_hits, r.is_neardup) for r in ingest().collect()
+        }
     index.unpersist()
     assert got2 == got

@@ -32,7 +32,6 @@ import os
 import re
 import sys
 import time
-import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -73,28 +72,19 @@ N_RUNS = 3
 
 def _noop_stream(spark, n_files: int) -> float:
     """Minimal availableNow run over n_files 1-row parquet files
-    (maxFilesPerTrigger=1 => n_files micro-batches)."""
-    from bugzilla_etl_spark.tmpdirs import tracked_mkdtemp
+    (maxFilesPerTrigger=1 => n_files micro-batches), through the same
+    ``to_memory`` start/await path as the entries; its dirs and view
+    go when its scope ends, after the clock stops."""
+    from bugzilla_etl_spark import tmpdirs
+    from bugzilla_etl_spark.streaming.landing import landed_stream, to_memory
 
-    src = tracked_mkdtemp(prefix="bes_sbnoop_")
-    for i in range(n_files):
-        spark.range(i, i + 1).coalesce(1).write.mode("append").parquet(src)
-    name = f"sb_noop_{uuid.uuid4().hex[:8]}"
-    t0 = time.perf_counter()
-    q = (
-        spark.readStream.schema("id long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.format("memory")
-        .queryName(name)
-        .option("checkpointLocation", tracked_mkdtemp(prefix="bes_sbck_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    dt = time.perf_counter() - t0
-    spark.catalog.dropTempView(name)
-    return dt
+    with tmpdirs.scope("sb_noop"):
+        src = tmpdirs.tracked_mkdtemp(prefix="bes_sbnoop_")
+        for i in range(n_files):
+            spark.range(i, i + 1).coalesce(1).write.mode("append").parquet(src)
+        t0 = time.perf_counter()
+        to_memory(landed_stream(spark, src, "id long"), "append", "sb_noop_")
+        return time.perf_counter() - t0
 
 
 def main() -> None:
@@ -162,21 +152,18 @@ def main() -> None:
         if name not in catalog.QUERIES:
             continue
         runs = []
-        best_prog = None
         for _ in range(N_RUNS):
             # each pass is its own run: its landing/checkpoint dirs
             # and memory-sink view go when it ends
             dt, stats = catalog.noop_pass(
                 name, spark, sf_dir, **prep_kwargs.get(name, {})
             )
-            if "progress" in stats and (not runs or dt < min(runs)):
-                best_prog = stats["progress"]
+            if not runs or dt < min(runs):
+                progress[name] = stats["progress"]
                 if "split" in stats:
-                    best_prog = {**best_prog, "split": stats["split"]}
+                    progress[name]["split"] = stats["split"]
             runs.append(dt)
         timings[name] = round(min(runs), 3)
-        if best_prog:
-            progress[name] = best_prog
 
     if art_dir is not None:
         shutil.rmtree(art_dir, ignore_errors=True)
@@ -193,13 +180,13 @@ def main() -> None:
         # (stream_bpe_encode's tokenizer train+save: paid before the
         # stream exists in production, so not part of its pin)
         "prepared": prepared,
-        # winning pass's StreamingQueryProgress summary for entries
-        # whose runner records one (the stream-stream interval
-        # joins): state rows/memory and summed durationMs components
-        # — addBatch is data work, walCommit/commitOffsets/
-        # stateCommit are checkpoint IO.  Recorded because the r12
-        # re-pin of this pair could not be root-caused from wall
-        # clock alone.
+        # winning pass's StreamingQueryProgress summary, one per
+        # entry (every entry drains through landing.drain, which
+        # records it): state rows/memory and summed durationMs
+        # components — addBatch is data work, walCommit/
+        # commitOffsets/stateCommit are checkpoint IO.  Recorded
+        # because the r12 re-pin of the interval joins could not be
+        # root-caused from wall clock alone.
         "progress": progress,
         "noop_1batch": noop1,
         "noop_3batch": noop3,
