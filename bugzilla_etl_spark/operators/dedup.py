@@ -1168,96 +1168,6 @@ def spans_from_hits(hits: DataFrame, k: int = 8) -> DataFrame:
     )
 
 
-def write_gram_index(
-    docs: DataFrame,
-    name: str,
-    path: str,
-    k: int = 8,
-    buckets: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    mode: str = "overwrite",
-    hash_bits: int = 60,
-) -> str:
-    """Persist the corpus's DISTINCT k-gram hash index as a REAL
-    bucketed table (the #163 bucketBy pattern) — the 100 TB form of
-    the ExactSubstr ingest probe that SCALING.md described and
-    round-13 left unwired (r13 verdict task 4): the index is written
-    (and its shuffle paid) ONCE; every later micro-batch probe joins
-    against the bucket layout with ZERO exchange on the index side.
-
-    ``mode="append"`` lands an increment's grams as additional
-    bucket files — the incremental ingest path.  Appended increments
-    are deduplicated only within themselves, so the stored index MAY
-    carry cross-increment duplicate hashes; probes therefore use a
-    LEFT SEMI join (``probe_gram_index``), which is amplification-
-    proof by definition.  Compact by rewriting with
-    ``mode="overwrite"`` when the duplicate fraction matters.
-
-    The table is EXTERNAL over ``path`` with caller-chosen ``name``
-    (per-invocation unique; the in-memory catalog entry dies with
-    the session, the dir with the tempdir registry)."""
-    idx = gram_positions(
-        docs, k=k, text_col=text_col, id_col=id_col, hash_bits=hash_bits
-    ).select("gh").distinct()
-    (
-        idx.repartition(buckets, F.col("gh"))  # one file per bucket
-        .write.mode(mode)
-        .option("path", path)
-        .bucketBy(buckets, "gh")
-        .sortBy("gh")
-        .saveAsTable(name)
-    )
-    return name
-
-
-def probe_gram_index(
-    index: DataFrame,
-    batch: DataFrame,
-    k: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    hash_bits: int = 60,
-) -> DataFrame:
-    """Per-batch ExactSubstr probe against a persisted gram index:
-    the incoming batch's positional grams LEFT SEMI join the index
-    on the 8-byte hash.  With ``index = spark.table(<bucketed>)``
-    the semi SMJ reads the index's bucket layout directly — only
-    the (micro-batch-sized) probe side exchanges; the corpus-grain
-    index side never does (plan-asserted in tests).  The ``merge``
-    hint pins the SMJ so the co-location is exercised at any SF
-    (AQE would broadcast a test-scale index, bypassing the layout
-    being demonstrated; a merge hint has no build side to OOM).
-    Semi join ⇒ exact under appended-duplicate hashes in the index.
-    Returns (doc_id, pos) duplicated-gram hits for
-    ``spans_from_hits``.
-
-    ``hash_bits`` must match the width the persisted index was
-    built at: gh is BIGINT at 60 and STRING (md5 hex) at 128, so a
-    mismatched probe would let the join key coerce, null every
-    comparison, and return ZERO hits instead of failing — validated
-    against the index's gh dtype up front (r15 advice)."""
-    from pyspark.sql.types import LongType, StringType
-
-    expected = LongType() if hash_bits == 60 else StringType()
-    actual = index.schema["gh"].dataType
-    if actual != expected:
-        built_at = 60 if isinstance(actual, LongType) else 128
-        raise ValueError(
-            f"probe_gram_index(hash_bits={hash_bits}) against an index"
-            f" whose gh is {actual.simpleString()} (built at"
-            f" hash_bits={built_at}): the coerced join would silently"
-            " return zero hits — probe with the width the index was"
-            " written at, or rewrite the index"
-        )
-    grams = gram_positions(
-        batch, k=k, text_col=text_col, id_col=id_col, hash_bits=hash_bits
-    )
-    return grams.join(
-        index.hint("merge"), "gh", "left_semi"
-    ).select("doc_id", "pos")
-
-
 def apply_span_removal(
     docs: DataFrame,
     k: int = 8,

@@ -627,8 +627,8 @@ TOKENIZER_SCHEMA = "term string, ids array<bigint>"
 
 def save_tokenizer(term_ids: DataFrame, path: str) -> str:
     """Persist a learned tokenizer's (term, ids) frame as a parquet
-    store artifact — the production shape (the write_gram_index /
-    alias_compact precedent): the tokenizer trains ONCE, the
+    store artifact — the production shape (the alias_compact
+    precedent): the tokenizer trains ONCE, the
     artifact is SAVED, and every later consumer (a stream start, a
     new encode job) loads it instead of re-running the merge loop
     (r15 verdict task 3).  Saved at vocab grain, not as the folded

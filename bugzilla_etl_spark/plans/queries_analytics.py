@@ -1691,9 +1691,7 @@ def _pr_iter_sql(i: int) -> str:
     FROM r3 ORDER BY r DESC, node ASC LIMIT 20
     """,
 )
-def pagerank_trade(
-    spark: SparkSession, sf_dir: str, persist_edges: bool = False
-) -> DataFrame:
+def pagerank_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank over the symmetrized customer↔supplier trade graph
     (3 power iterations, damping 0.85): the graph-centrality pass a
     curation pipeline runs over citation/link graphs to weight
@@ -1738,27 +1736,18 @@ def pagerank_trade(
         .distinct()
     )
     # The edge list feeds every iteration (plus outdeg/nodes/nn), so
-    # each reference re-runs the lineitem⋈orders distinct — the
-    # GraphX instinct says persist it.  MEASURED OTHERWISE at this
-    # scale: persisting planned 5.7 -> 9.3 s, because the cache
-    # materialization barrier hides size stats from AQE, turning the
-    # per-iteration edges⋈ranks joins into fixed-partition SMJs where
-    # the un-persisted plan broadcasts the (nodes-sized) rank frame
-    # from measured sizes.  At 100-TB graph scale the calculus flips
-    # — ranks stop being broadcastable, the SMJ is the intended
-    # shape, and you materialize the edge list once — which is what
-    # persist_edges=True selects (the wired scale knob; identical
-    # results, property-tested).
+    # each reference re-runs the lineitem⋈orders distinct.  Do NOT
+    # persist it: the cache barrier hides size stats from AQE and turns
+    # the per-iteration edges⋈ranks joins from rank broadcasts into
+    # fixed-partition SMJs.  Measured slower at every scale tried
+    # (SCALING.md round 8: 6.58 vs 4.51 s at sf0.1;
+    # PAGERANK_DECADE_r14.json: 1.35x and 1.29x the un-persisted wall
+    # at x20 and x40); no crossover was reached.
     edges = trade.unionAll(
         trade.select(
             F.col("dst").alias("src"), F.col("src").alias("dst")
         )
     )
-    if persist_edges:
-        # pinned per invocation (tmpdirs.pin): repeated bench/probe
-        # passes measure a cold build, and the cache is released with
-        # the run instead of accumulating across knob invocations
-        edges = pin(edges, StorageLevel.MEMORY_AND_DISK_DESER)
     outdeg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
     nodes = edges.select("src").distinct().withColumnRenamed(
         "src", "node"

@@ -523,7 +523,7 @@ def dedup_spans(
     semi-join, doc-bounded windows).  ``hash_bits``: 60 (registered
     default — 8-byte shuffle keys) or 128 (full md5 — the >= 1e9
     distinct-grams setting; oracle-checked at both widths via
-    dedup_spans_oracle, the #186 index_mode precedent).
+    dedup_spans_oracle).
     reference scope: training-data pipeline extension."""
     docs = load_table(spark, sf_dir, "documents")
     return D.exact_substring_spans(

@@ -182,7 +182,6 @@ def moving_average_ranged(
     spark: SparkSession,
     sf_dir: str,
     width_s: int = 3600,
-    paned: bool = True,
 ) -> DataFrame:
     """Trailing-hour moving average per entity, computed so that a
     HOT KEY no longer serializes one task: the skew sweep measured
@@ -205,8 +204,7 @@ def moving_average_ranged(
 
     Value-EXACT vs the single-partition form (the frame SET is
     identical; only the partitioning moved): the oracle is the plain
-    per-user RANGE window, and ``paned=False`` wires the classic
-    form for A/B.  Cost: 2x rows through one exchange keyed
+    per-user RANGE window.  Cost: 2x rows through one exchange keyed
     (user_id, pane) — the shuffle a splittable plan buys vs the
     straggler it retires.  Ordering key is integer epoch-µs on both
     engines, so frame bounds agree exactly."""
@@ -215,16 +213,6 @@ def moving_average_ranged(
     )
     width_us = width_s * 1_000_000
     us = F.unix_micros("ts")  # == DuckDB epoch_us bit-for-bit
-    if not paned:
-        w = (
-            Window.partitionBy("user_id")
-            .orderBy(us)
-            .rangeBetween(-width_us, 0)
-        )
-        return ev.select(
-            "user_id", "event_id", "ts",
-            F.round(F.avg("value").over(w), 4).alias("ma_1h"),
-        )
     base = ev.select(
         "user_id", "event_id", "ts", "value",
         us.alias("us"),
@@ -1008,9 +996,7 @@ def zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY d.event_type
     """,
 )
-def anomaly_mad(
-    spark: SparkSession, sf_dir: str, mode: str = "exact"
-) -> DataFrame:
+def anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Robust per-type outlier screen: median + MAD (median absolute
     deviation), flagging |value − median| > 3·MAD — the
     outlier-resistant quality gate (mean/stddev is itself dragged by
@@ -1036,14 +1022,8 @@ def anomaly_mad(
     partitioning.
     Exact per-key medians need a per-key sort — that is the
     contract; at sparse-key 100 TB keep this form, at hot-key scale
-    ``mode="hist"`` is the WIRED knob selecting the mergeable
-    histogram sketch (same columns; oracle-checked standalone as
-    anomaly_mad_hist)."""
-    if mode == "hist":
-        ev = load_table(spark, sf_dir, "events").select(
-            "event_type", "value"
-        )
-        return _anomaly_mad_hist(ev)
+    use the mergeable histogram sketch (same columns, its own
+    oracle-checked entry: anomaly_mad_hist)."""
     ev = (
         load_table(spark, sf_dir, "events")
         .select("event_type", "value", "event_id")
@@ -1099,9 +1079,65 @@ def anomaly_mad(
     )
 
 
-def _anomaly_mad_hist(ev: DataFrame) -> DataFrame:
-    """Histogram-sketch median/MAD (anomaly_mad's scale mode): the
-    512-unit-bin value histogram (hist_quantile's grid) gives the
+@register(
+    "anomaly_mad_hist",
+    oracle="""
+    WITH h AS (
+        SELECT event_type,
+               CAST(least(floor(value), 511) AS BIGINT) AS b,
+               count(*) AS c
+        FROM events
+        -- same screen as the exact form: observed values of
+        -- attributable types only (see anomaly_mad's oracle)
+        WHERE value IS NOT NULL AND event_type IS NOT NULL
+        GROUP BY 1, 2
+    ),
+    t AS (
+        SELECT event_type, b, c,
+               sum(c) OVER (PARTITION BY event_type ORDER BY b
+                            ROWS BETWEEN UNBOUNDED PRECEDING
+                            AND CURRENT ROW) AS cum,
+               sum(c) OVER (PARTITION BY event_type) AS n
+        FROM h
+    ),
+    med AS (
+        SELECT event_type, max(n) AS n,
+               min(CASE WHEN cum >= (n + 1) // 2 THEN b END) AS med_b
+        FROM t GROUP BY 1
+    ),
+    dh AS (
+        SELECT h.event_type, abs(h.b - m.med_b) AS d,
+               sum(h.c) AS c, max(m.n) AS n, max(m.med_b) AS med_b
+        FROM h JOIN med m USING (event_type) GROUP BY 1, 2
+    ),
+    dt AS (
+        SELECT event_type, d, c, n, med_b,
+               sum(c) OVER (PARTITION BY event_type ORDER BY d
+                            ROWS BETWEEN UNBOUNDED PRECEDING
+                            AND CURRENT ROW) AS cum
+        FROM dh
+    ),
+    dm AS (
+        SELECT *, min(CASE WHEN cum >= (n + 1) // 2 THEN d END)
+                  OVER (PARTITION BY event_type) AS mad_b
+        FROM dt
+    )
+    SELECT event_type, CAST(max(n) AS BIGINT) AS n,
+           max(med_b) + 0.5 AS med,
+           max(mad_b) + 0.5 AS mad,
+           CAST(coalesce(sum(CASE WHEN d > 3 * mad_b THEN c END), 0)
+                AS BIGINT) AS n_outliers
+    FROM dm GROUP BY 1
+    """,
+)
+def anomaly_mad_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """anomaly_mad's SCALE MODE: same output columns as the exact
+    form, median/MAD read off mergeable integer histograms — one
+    map-side-combined corpus aggregation bounded at 512 rows per
+    group, vs the exact form's per-key sort.  The unit test pins the
+    estimates within one bin width of the exact answers.
+
+    The 512-unit-bin value histogram (hist_quantile's grid) gives the
     binned median; the DEVIATION histogram then derives from the
     value histogram itself — bins are integers, so d = |b − med_b|
     regroups the ≤512-row histogram with NO second corpus pass —
@@ -1112,13 +1148,14 @@ def _anomaly_mad_hist(ev: DataFrame) -> DataFrame:
 
     Null contract — same screen as the exact form: a null value is
     no measurement and a null type has no cohort, so both are
-    filtered HERE (not in callers) so ``mode="hist"`` and the
-    standalone entry can never diverge from the exact form's n on a
-    dirty corpus; a null bin would also sit first in Spark's
-    cumulative window but last in DuckDB's (nulls_last default),
-    silently shifting the (n+1)//2 median-bin crossing."""
-    ev = ev.where(
-        F.col("value").isNotNull() & F.col("event_type").isNotNull()
+    filtered HERE so this entry can never diverge from the exact
+    form's n on a dirty corpus; a null bin would also sit first in
+    Spark's cumulative window but last in DuckDB's (nulls_last
+    default), silently shifting the (n+1)//2 median-bin crossing."""
+    ev = (
+        load_table(spark, sf_dir, "events")
+        .select("event_type", "value")
+        .where(F.col("value").isNotNull() & F.col("event_type").isNotNull())
     )
     b = F.least(F.floor("value"), F.lit(511)).cast("long")
     h = ev.groupBy("event_type", b.alias("b")).agg(
@@ -1183,71 +1220,6 @@ def _anomaly_mad_hist(ev: DataFrame) -> DataFrame:
         .cast("long")
         .alias("n_outliers"),
     )
-
-
-@register(
-    "anomaly_mad_hist",
-    oracle="""
-    WITH h AS (
-        SELECT event_type,
-               CAST(least(floor(value), 511) AS BIGINT) AS b,
-               count(*) AS c
-        FROM events
-        -- same screen as the exact form: observed values of
-        -- attributable types only (see anomaly_mad's oracle)
-        WHERE value IS NOT NULL AND event_type IS NOT NULL
-        GROUP BY 1, 2
-    ),
-    t AS (
-        SELECT event_type, b, c,
-               sum(c) OVER (PARTITION BY event_type ORDER BY b
-                            ROWS BETWEEN UNBOUNDED PRECEDING
-                            AND CURRENT ROW) AS cum,
-               sum(c) OVER (PARTITION BY event_type) AS n
-        FROM h
-    ),
-    med AS (
-        SELECT event_type, max(n) AS n,
-               min(CASE WHEN cum >= (n + 1) // 2 THEN b END) AS med_b
-        FROM t GROUP BY 1
-    ),
-    dh AS (
-        SELECT h.event_type, abs(h.b - m.med_b) AS d,
-               sum(h.c) AS c, max(m.n) AS n, max(m.med_b) AS med_b
-        FROM h JOIN med m USING (event_type) GROUP BY 1, 2
-    ),
-    dt AS (
-        SELECT event_type, d, c, n, med_b,
-               sum(c) OVER (PARTITION BY event_type ORDER BY d
-                            ROWS BETWEEN UNBOUNDED PRECEDING
-                            AND CURRENT ROW) AS cum
-        FROM dh
-    ),
-    dm AS (
-        SELECT *, min(CASE WHEN cum >= (n + 1) // 2 THEN d END)
-                  OVER (PARTITION BY event_type) AS mad_b
-        FROM dt
-    )
-    SELECT event_type, CAST(max(n) AS BIGINT) AS n,
-           max(med_b) + 0.5 AS med,
-           max(mad_b) + 0.5 AS mad,
-           CAST(coalesce(sum(CASE WHEN d > 3 * mad_b THEN c END), 0)
-                AS BIGINT) AS n_outliers
-    FROM dm GROUP BY 1
-    """,
-)
-def anomaly_mad_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """anomaly_mad's SCALE MODE as its own oracle-checked entry
-    (docstring at _anomaly_mad_hist): same output columns as the
-    exact form, median/MAD read off mergeable integer histograms —
-    one map-side-combined corpus aggregation bounded at 512 rows
-    per group, vs the exact form's per-key sort.  Same knob via
-    ``anomaly_mad(..., mode="hist")``; the unit test pins the
-    estimates within one bin width of the exact answers."""
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_type", "value"
-    )
-    return _anomaly_mad_hist(ev)
 
 
 @register(
@@ -1406,16 +1378,6 @@ def _profile_melt(od: DataFrame) -> DataFrame:
     )
 
 
-def _profile_hll_est(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(col_name, est) — portable-HLL NDV per profiled column."""
-    od = load_table(spark, sf_dir, "orders")
-    melt = _profile_melt(od)
-    return hll_estimate(
-        hll_registers(melt, key="col_name", val="val"),
-        key="col_name",
-    )
-
-
 def _profile_hll_duck_val(expr: str) -> str:
     return (
         f"(('0x' || substr(md5('hll:' || {expr}), 1, 15))"
@@ -1521,9 +1483,7 @@ def profile_table_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register("profile_table", oracle=_profile_oracle())
-def profile_table(
-    spark: SparkSession, sf_dir: str, ndv: str = "exact"
-) -> DataFrame:
+def profile_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Column-level data profiling — the ANALYZE TABLE pass every
     pipeline runs before planning joins and quality gates: per
     column, row count, null count, exact NDV, and min/max (numeric
@@ -1538,30 +1498,19 @@ def profile_table(
     per column; the alternative melt-then-groupBy(col_name) shape
     was rejected because column-name keys make one reducer hold
     every row of a column at 100 TB.  Exact NDV is the expensive
-    honest form; ``ndv="hll"`` is the WIRED scale knob — it swaps
-    in the per-column portable-HLL estimate (bounded shuffle: m
-    register rows per column), whose oracle-checked form is the
-    profile_table_hll entry; this exact form stays its accuracy
-    oracle."""
+    honest form; the per-column portable-HLL estimate (bounded
+    shuffle: m register rows per column) is its own entry,
+    profile_table_hll, and this exact form is its accuracy oracle."""
     od = load_table(spark, sf_dir, "orders")
     aggs = []
     str_aggs = []
     for name, kind, num, strx in _PROFILE_COLS:
         if name == "o_orderdate":
             num = _EPOCH_SPARK
-        # hll mode must not pay for the exact NDV it replaces: the
-        # Expand fan-out exists ONLY to serve multi-countDistinct,
-        # so a zero placeholder keeps the wide agg a plain one-pass
-        # aggregate and the sketch supplies ndv after the stack
-        ndv_agg = (
-            F.countDistinct(name)
-            if ndv == "exact"
-            else F.max(F.lit(0)).cast("long")
-        )
         aggs += [
             F.count(F.lit(1)).alias(f"{name}__n"),
             (F.count(F.lit(1)) - F.count(name)).alias(f"{name}__n_null"),
-            ndv_agg.alias(f"{name}__ndv"),
+            F.countDistinct(name).alias(f"{name}__ndv"),
         ]
         if kind == "num":
             aggs += [
@@ -1598,37 +1547,12 @@ def profile_table(
         f" {name}__min_str, {name}__max_str"
         for name, *_ in _PROFILE_COLS
     )
-    out = wide.select(
+    return wide.select(
         F.expr(
             f"stack({len(_PROFILE_COLS)}, {stacks}) AS (col_name, n,"
             " n_null, ndv, min_num, max_num, min_str, max_str)"
         )
     )
-    if ndv == "hll":
-        # the scale knob, wired: swap exact NDV for the bounded-
-        # shuffle HLL estimate (same schema; profile_table_hll is
-        # the oracle-checked form of this path)
-        est = _profile_hll_est(spark, sf_dir)
-        out = (
-            out.drop("ndv")
-            .join(F.broadcast(est), on="col_name", how="left")
-            .select(
-                "col_name",
-                "n",
-                "n_null",
-                # a column with zero non-null values has no estimate
-                # row (the melt filtered it) — report 0 like exact
-                # mode does, not NULL
-                F.round(F.coalesce(F.col("est"), F.lit(0.0)))
-                .cast("long")
-                .alias("ndv"),
-                "min_num",
-                "max_num",
-                "min_str",
-                "max_str",
-            )
-        )
-    return out
 
 
 def skyline_pass(pts: DataFrame, part: str | None = None) -> DataFrame:
@@ -1987,9 +1911,9 @@ def kmv_source_overlap(
     sorted; everything after operates on k-row sketches against a
     |sources|² pair dim.  The exact side exists to surface the
     realized error (the hll_distinct pattern); at 100 TB you run
-    only the sketches — ``exact=False`` (the `profile_table(ndv=)`
-    knob pattern) SKIPS the exact-Jaccard side entirely: output
-    drops `n_a`/`jaccard_exact`/`err`, and the plan contains no
+    only the sketches — ``exact=False`` SKIPS the exact-Jaccard
+    side entirely: output drops `n_a`/`jaccard_exact`/`err`, and
+    the plan contains no
     corpus-pair SortMergeJoin (asserted by the fleet plan test) —
     the corpus is read exactly once (the heap pass), and the only
     rows that ever shuffle are the ≤ k×partitions sketch rows.  The

@@ -20,6 +20,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from bugzilla_etl_spark.functions.hashing import duckdb_hash64
 from bugzilla_etl_spark.operators import alias as AL
@@ -45,7 +46,7 @@ from bugzilla_etl_spark.streaming.landing import (
     to_batch_dirs,
     to_memory,
 )
-from bugzilla_etl_spark.tmpdirs import apply_conf, tracked_mkdtemp
+from bugzilla_etl_spark.tmpdirs import apply_conf, pin, tracked_mkdtemp
 
 # ---- deterministic flag-change synthesis (same CASEs both engines) --
 # name: every 5th event uses the UPPER-cased type, exercising
@@ -713,8 +714,6 @@ def build_full_docs(
     # untouched either way: fch/ach/alias still scan the source
     # directly.
     if pin_spine:
-        from bugzilla_etl_spark.tmpdirs import pin
-
         verx = pin(verx)
 
     fch = base.select(
@@ -1534,18 +1533,15 @@ def stream_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             ("incoming_b", incoming.where(F.col("doc_id") % 10 == 5)),
         ],
     )
-    index = band_index(static).persist()
+    index = pin(band_index(static), StorageLevel.MEMORY_AND_DISK_DESER)
     index.count()  # materialize once; both micro-batches reuse it
-    try:
-        return to_batch_dirs(
-            spark,
-            landing,
-            docs.schema,
-            lambda batch: screen_batch(batch, index),
-            "doc_id long, n_hits long, is_neardup int",
-        )
-    finally:
-        index.unpersist()
+    return to_batch_dirs(
+        spark,
+        landing,
+        docs.schema,
+        lambda batch: screen_batch(batch, index),
+        "doc_id long, n_hits long, is_neardup int",
+    )
 
 
 from bugzilla_etl_spark.plans.queries_pipeline import (  # noqa: E402
@@ -1999,7 +1995,6 @@ def stream_dedup_spans_oracle(hash_bits: int = 60) -> str:
 def stream_dedup_spans(
     spark: SparkSession,
     sf_dir: str,
-    index_mode: str = "memory",
     hash_bits: int = 60,
 ) -> DataFrame:
     """ExactSubstr span detection at INGEST time — the spans family's
@@ -2014,38 +2009,19 @@ def stream_dedup_spans(
     streaming == batch by construction and the oracle is the pure
     batch computation).
 
-    Scale shape: the gram index is corpus-grain but SHUFFLE-FREE to
-    probe per batch; per-batch work beyond the probe is the same
-    doc-bounded island merge as #182.  Batch-keyed output dirs keep
-    checkpoint replays idempotent.
-
-    ``index_mode`` selects the index's physical form (identical
-    results, oracle-checked at both settings — r13 verdict task 4):
-
-    - ``"memory"`` (default): the distinct gram-hash set persisted
-      in-memory and hash-joined per batch — the local-harness form,
-      rebuilt per run.
-    - ``"bucketed"``: the 100 TB form — the index is WRITTEN ONCE as
-      a real bucketBy(gh) table (operators.dedup.write_gram_index,
-      the #163 pattern) and each micro-batch probes it with a semi
-      SMJ that reads the bucket layout directly: zero exchange on
-      the corpus-grain index side (plan-asserted in
-      tests/test_round14.py), only the micro-batch-sized gram
-      stream shuffles.  Incremental corpus growth appends bucket
-      files (write_gram_index mode="append"; probes stay exact via
-      the semi join).
+    Scale shape: the gram index (the distinct gram-hash set of the
+    reference half, pinned for the run and hash-joined per batch) is
+    corpus-grain but SHUFFLE-FREE to probe per batch; per-batch work
+    beyond the probe is the same doc-bounded island merge as #182.
+    Batch-keyed output dirs keep checkpoint replays idempotent.
 
     ``hash_bits``: 60 (registered default) or 128 (full md5, the
     >= 1e9 distinct-grams setting) — threaded through index build
     AND probe; oracle-checked at both widths via
     stream_dedup_spans_oracle (r14 verdict task 5)."""
-    import uuid
-
     from bugzilla_etl_spark.operators.dedup import (
         gram_positions,
-        probe_gram_index,
         spans_from_hits,
-        write_gram_index,
     )
 
     docs = load_table(spark, sf_dir, "documents")
@@ -2061,48 +2037,28 @@ def stream_dedup_spans(
         ],
     )
 
-    if index_mode == "bucketed":
-        idx_name = f"bes_gramidx_{uuid.uuid4().hex[:8]}"
-        write_gram_index(
-            static, idx_name, tracked_mkdtemp(prefix="bes_sdsi_"),
-            hash_bits=hash_bits,
-        )
-        ref = spark.table(idx_name)
-    else:
-        ref = (
-            gram_positions(static, hash_bits=hash_bits)
-            .select("gh").distinct().persist()
-        )
-        ref.count()  # materialize once; both micro-batches reuse it
+    ref = pin(
+        gram_positions(static, hash_bits=hash_bits).select("gh").distinct(),
+        StorageLevel.MEMORY_AND_DISK_DESER,
+    )
+    ref.count()  # materialize once; both micro-batches reuse it
 
     def spans(batch: DataFrame) -> DataFrame:
-        if index_mode == "bucketed":
-            hits = probe_gram_index(ref, batch, hash_bits=hash_bits)
-        else:
-            hits = (
-                gram_positions(batch, hash_bits=hash_bits)
-                .join(ref, "gh")
-                .select("doc_id", "pos")
-            )
+        hits = (
+            gram_positions(batch, hash_bits=hash_bits)
+            .join(ref, "gh")
+            .select("doc_id", "pos")
+        )
         return spans_from_hits(hits)
 
-    try:
-        return to_batch_dirs(
-            spark,
-            landing,
-            docs.schema,
-            spans,
-            "doc_id long, span_start int, span_end int,"
-            " span_tokens int, n_dup_grams long",
-        )
-    finally:
-        if index_mode == "bucketed":
-            # result rows are materialized parquet under the batch
-            # dirs, so the catalog entry can drop now (data dir is
-            # GC'd with the tempdir registry)
-            spark.sql(f"DROP TABLE IF EXISTS {idx_name}")
-        else:
-            ref.unpersist()
+    return to_batch_dirs(
+        spark,
+        landing,
+        docs.schema,
+        spans,
+        "doc_id long, span_start int, span_end int,"
+        " span_tokens int, n_dup_grams long",
+    )
 
 
 from bugzilla_etl_spark.plans.queries_text import (  # noqa: E402
@@ -2143,8 +2099,8 @@ def stream_bpe_encode(
 
     Scale shape: train-side cost is the #183 loop (vocab grain, paid
     once BEFORE the stream exists); the frozen tokenizer is a REAL
-    store artifact (``save_tokenizer`` — the write_gram_index /
-    alias_compact precedent), saved as vocab-grain parquet and
+    store artifact (``save_tokenizer`` — the alias_compact
+    precedent), saved as vocab-grain parquet and
     LOADED at stream start (r15 verdict task 3: production serves a
     saved artifact; re-training per stream start was a harness
     artifact, and it made the bench pin protocol-sensitive — fresh
@@ -2174,12 +2130,15 @@ def stream_bpe_encode(
 
     # train once, SAVE, freeze: the artifact round-trips through the
     # store, then folds to the one-row map each micro-batch
-    # broadcasts (persist + count, released in the finally — the
-    # learn loop's own caches are nonce-guarded)
+    # broadcasts (pinned for the run — the learn loop's own caches
+    # are nonce-guarded)
     if tokenizer_path is None:
         tokenizer_path = tracked_mkdtemp(prefix="bes_sbetok_")
         save_tokenizer(bpe_tokenizer_terms(spark, reference), tokenizer_path)
-    tok_map = fold_term_map(load_tokenizer(spark, tokenizer_path)).persist()
+    tok_map = pin(
+        fold_term_map(load_tokenizer(spark, tokenizer_path)),
+        StorageLevel.MEMORY_AND_DISK_DESER,
+    )
     tok_map.count()
 
     landing = tracked_mkdtemp(prefix="bes_sbe_")
@@ -2196,13 +2155,10 @@ def stream_bpe_encode(
             for pos in range(2)
         ],
     )
-    try:
-        return to_batch_dirs(
-            spark,
-            landing,
-            docs.schema,
-            lambda batch: bpe_encode_docs(batch, tok_map, unk=True),
-            "doc_id long, n_terms long, n_tokens long, token_ids string",
-        )
-    finally:
-        tok_map.unpersist()
+    return to_batch_dirs(
+        spark,
+        landing,
+        docs.schema,
+        lambda batch: bpe_encode_docs(batch, tok_map, unk=True),
+        "doc_id long, n_terms long, n_tokens long, token_ids string",
+    )

@@ -15,6 +15,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bugzilla_etl_spark.tmpdirs import apply_conf
+
 TABLES = (
     "region",
     "nation",
@@ -53,9 +55,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # (events normalization, orderdate epoch projections) is
     # value-identical only under a UTC session tz.  session.py pins
     # it, but the external driver / a notebook supplies its own
-    # session — pin at the load seam for EVERY table (runtime-settable
-    # conf, no-op when already UTC).
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    # session — pin at the load seam for EVERY table.  Both confs here
+    # are set through the current scope, so a run restores them when
+    # it ends; the frame must execute inside that run.
+    apply_conf(spark, {"spark.sql.session.timeZone": "UTC"})
     if name == "events":
         # events.ts has shipped as parquet TIMESTAMP(NANOS) (which Spark's
         # vectorized reader refuses — read nanos as long and rebuild with
@@ -64,7 +67,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # false (which Spark reads as TIMESTAMP_NTZ — not castable to
         # long).  Normalize BOTH to TimestampType; the session tz is
         # pinned UTC so the ntz->tz cast is value-identical.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        apply_conf(spark, {"spark.sql.legacy.parquet.nanosAsLong": "true"})
         df = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
         return normalize_events_ts(df)
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))

@@ -2,10 +2,10 @@
 slices, the hot-key paned family, and the out-of-order streaming
 pair.
 
-1. The hist MAD path now applies the exact form's null screen
-   (observed values of attributable types) INSIDE _anomaly_mad_hist,
-   so ``mode="hist"``, the standalone entry, and the exact form can
-   never diverge on n over a dirty corpus — and the null bin can no
+1. The hist MAD entry now applies the exact form's null screen
+   (observed values of attributable types) itself, so
+   ``anomaly_mad_hist`` and the exact form can never diverge on n
+   over a dirty corpus — and the null bin can no
    longer shift the (n+1)//2 median-bin crossing differently in
    Spark (nulls-first cumulative window) vs DuckDB (nulls_last).
 2. validate_clustered_layout's markerless fallback now probes the
@@ -40,7 +40,7 @@ def _q(name, spark, sf_dir):
 
 def test_anomaly_mad_hist_null_screen_matches_exact(spark, tmp_path):
     """On a corpus with null values AND null event types, the hist
-    mode must screen the same population as the exact mode: per-type
+    entry must screen the same population as the exact entry: per-type
     n identical, no null-type cohort, and the hist output identical
     to running hist on the pre-screened corpus (the null rows must
     be invisible, not merely binned somewhere stable)."""
@@ -55,23 +55,15 @@ def test_anomaly_mad_hist_null_screen_matches_exact(spark, tmp_path):
         r["event_type"]: r["n"]
         for r in _q("anomaly_mad", spark, dirty).collect()
     }
-    hist_rows = (
-        catalog.QUERIES["anomaly_mad"](spark, dirty, mode="hist")
-        .collect()
-    )
-    hist = {r["event_type"]: r["n"] for r in hist_rows}
-    assert None not in hist, "hist mode kept a null-type cohort"
-    assert hist == exact, (
-        "hist and exact modes screened different populations on a "
-        f"dirty corpus: {hist} vs {exact}"
-    )
-
-    # the standalone entry routes through the same kernel
-    standalone = {
+    hist = {
         r["event_type"]: r["n"]
         for r in _q("anomaly_mad_hist", spark, dirty).collect()
     }
-    assert standalone == exact
+    assert None not in hist, "hist entry kept a null-type cohort"
+    assert hist == exact, (
+        "hist and exact entries screened different populations on a "
+        f"dirty corpus: {hist} vs {exact}"
+    )
 
 
 # ---------------------------------------------------------------------
@@ -150,8 +142,8 @@ def _plan(df) -> str:
 def test_moving_average_ranged_splits_hot_key(spark, sf_dir):
     """The paned plan must window over (user_id, pane) — the hot key
     splits across panes — with NO user_id-only window partition
-    anywhere; the unpaned knob must produce identical values (the
-    frame SET is unchanged, only the partitioning moved)."""
+    anywhere (value parity with the per-user RANGE window is the
+    entry's oracle check)."""
     import re
 
     catalog.load_all()
@@ -164,16 +156,6 @@ def test_moving_average_ranged_splits_hot_key(spark, sf_dir):
         "a user_id-only exchange survived — the hot key would"
         " serialize one task"
     )
-    classic = catalog.QUERIES["moving_average_ranged"](
-        spark, sf_dir, paned=False
-    )
-    got = sorted(
-        map(tuple, paned.select("user_id", "event_id", "ma_1h").collect())
-    )
-    want = sorted(
-        map(tuple, classic.select("user_id", "event_id", "ma_1h").collect())
-    )
-    assert got == want
 
 
 def test_moving_average_ranged_pane_boundary_exact(spark):

@@ -44,84 +44,6 @@ def test_triangle_count_scaled_surfaces_kept_fraction(spark, sf_dir):
     assert 0.0 < fracs.pop() <= 1.0
 
 
-def _gram_docs(spark, rows):
-    return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def test_gram_index_probe_zero_exchange_on_index_side(spark, tmp_path):
-    """The 100 TB ExactSubstr probe shape (r13 verdict task 4): the
-    persisted gram index is a real bucketed table, and the per-batch
-    semi join reads its bucket layout directly — the executed plan
-    carries bucket metadata on the index scan and EXACTLY ONE
-    exchange (the micro-batch-sized probe side), zero on the
-    corpus-grain index side."""
-    import re
-
-    from bugzilla_etl_spark.operators.dedup import (
-        probe_gram_index,
-        write_gram_index,
-    )
-
-    corpus = _gram_docs(
-        spark,
-        [(2, "a b c d e f g h i j k l"), (4, "a b c d e f g h x y z w")],
-    )
-    name = write_gram_index(
-        corpus, "bes_gramidx_plan_t", str(tmp_path / "idx")
-    )
-    batch = _gram_docs(spark, [(1, "a b c d e f g h q r s t")])
-    hits = probe_gram_index(spark.table(name), batch)
-    plan = hits._jdf.queryExecution().executedPlan().toString()
-    assert "SortMergeJoin" in plan and "LeftSemi" in plan, plan
-    assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1, plan
-    assert "SelectedBucketsCount" in plan, plan
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-
-
-def test_gram_index_incremental_append(spark, tmp_path):
-    """Incremental corpus growth appends bucket files to the stored
-    index; later probes see BOTH increments, and the semi join stays
-    exact when the increments share grams (appended duplicates must
-    not amplify hits)."""
-    from bugzilla_etl_spark.operators.dedup import (
-        probe_gram_index,
-        write_gram_index,
-    )
-
-    inc_a = _gram_docs(spark, [(2, "a b c d e f g h i j k l")])
-    # shares the 'a..h' gram with inc_a -> duplicate hash in store
-    inc_b = _gram_docs(spark, [(4, "q r s t u v w x a b c d e f g h")])
-    path = str(tmp_path / "idx")
-    name = write_gram_index(inc_a, "bes_gramidx_inc_t", path)
-    batch = _gram_docs(
-        spark, [(1, "q r s t u v w x y z zz zzz"), (3, "a b c d e f g h z")]
-    )
-    before = probe_gram_index(spark.table(name), batch).collect()
-    # only doc 3's 'a..h' gram is indexed so far
-    assert {(r.doc_id, r.pos) for r in before} == {(3, 0)}
-    write_gram_index(inc_b, name, path, mode="append")
-    after = probe_gram_index(spark.table(name), batch).collect()
-    # doc 1's q..x gram now hits; doc 3's hit did NOT amplify
-    assert {(r.doc_id, r.pos) for r in after} == {(1, 0), (3, 0)}
-    assert len(after) == 2
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-
-
-def test_stream_dedup_spans_bucketed_matches_oracle(spark, duck, sf_dir):
-    """The parameterized entry at index_mode='bucketed' is oracle-
-    checked like the default: identical results from the persisted-
-    index probe (the driver checks the default; this pins the
-    parameter)."""
-    import __spark_entry__ as entry_mod
-    from bugzilla_etl_spark.plans.queries_history import (
-        stream_dedup_spans,
-    )
-    from tests.util import assert_same
-
-    sdf = stream_dedup_spans(spark, sf_dir, index_mode="bucketed")
-    assert_same(sdf, duck, entry_mod.oracle_sql()["stream_dedup_spans"])
-
-
 def test_stream_bug_versions_split_and_pin_restore(spark, sf_dir):
     """The r14 diagnosis wiring: the run records a per-phase wall
     split (restore/discover/append/rebuild_write/swap) in its stats

@@ -126,16 +126,14 @@ def test_dedup_spans_apply_both_hash_widths(spark, duck, sf_dir, hash_bits):
 def test_stream_dedup_spans_both_hash_widths(
     spark, duck, sf_dir, hash_bits
 ):
-    """#186 at both widths, through the bucketed-index path so the
-    128-bit setting exercises index build AND co-located probe."""
+    """#186 at both widths, so the 128-bit setting exercises index
+    build AND per-batch probe."""
     from bugzilla_etl_spark.plans.queries_history import (
         stream_dedup_spans,
         stream_dedup_spans_oracle,
     )
 
-    sdf = stream_dedup_spans(
-        spark, sf_dir, index_mode="bucketed", hash_bits=hash_bits
-    )
+    sdf = stream_dedup_spans(spark, sf_dir, hash_bits=hash_bits)
     assert_same(sdf, duck, stream_dedup_spans_oracle(hash_bits))
 
 

@@ -1,9 +1,9 @@
-"""Round-8 additions: two-phase skyline, scale knobs made real
-(pagerank persist, HLL profiling, histogram MAD), stream-stream
-OUTER join, sub-entity privacy propagation, tempdir hygiene.
+"""Round-8 additions: two-phase skyline, the sketch forms (HLL
+profiling, histogram MAD), stream-stream OUTER join, sub-entity
+privacy propagation, tempdir hygiene.
 
 Value parity vs DuckDB is covered by test_catalog_oracle for every
-registered query here; these tests pin the properties the knobs and
+registered query here; these tests pin the properties the sketches and
 compositions promise (phase equivalence, sketch error bounds,
 eviction semantics) that a value hash alone would not explain.
 """
@@ -54,42 +54,24 @@ def test_skyline_two_phase_equals_single_pass(spark, sf_dir):
     assert n_local < pts.count() / 10
 
 
-def test_pagerank_persist_knob_identical_results(spark, sf_dir):
-    """persist_edges=True (the 100-TB form: materialize the edge
-    list once, SMJ the iterations) returns bit-identical ranks to
-    the default AQE-broadcast form — the knob changes the physical
-    strategy, never the integer-grid math."""
-    base = _q("pagerank_trade", spark, sf_dir)
-    knob = catalog.QUERIES["pagerank_trade"](
-        spark, sf_dir, persist_edges=True
-    )
-    plan = knob._jdf.queryExecution().executedPlan().toString()
-    assert "InMemoryTableScan" in plan, plan[:2000]
-    assert sorted(map(tuple, base.collect())) == sorted(
-        map(tuple, knob.collect())
-    )
+def test_profile_table_hll_schema_and_error(spark, sf_dir):
+    """profile_table_hll profiles the same columns as profile_table
+    and lands every column's NDV within 15% of exact (m=1024
+    registers => ~3.25% standard error; sub-50 cardinalities ride the
+    linear-counting branch and are EXACT)."""
+    exact = {r["col_name"] for r in _q("profile_table", spark, sf_dir).collect()}
+    hll = _q("profile_table_hll", spark, sf_dir)
+    assert hll.columns == ["col_name", "ndv_exact", "hll_est", "rel_err"]
+    rows = hll.collect()
+    assert {r["col_name"] for r in rows} == exact
+    for r in rows:
+        if r["ndv_exact"] < 50:
+            assert round(r["hll_est"]) == r["ndv_exact"], r
+        assert r["rel_err"] <= 0.15, r
 
 
-def test_profile_table_hll_knob_schema_and_error(spark, sf_dir):
-    """ndv="hll" keeps profile_table's exact schema and lands every
-    column's NDV within 15% of exact (m=1024 registers => ~3.25%
-    standard error; sub-50 cardinalities ride the linear-counting
-    branch and are EXACT)."""
-    exact = _q("profile_table", spark, sf_dir)
-    hll = catalog.QUERIES["profile_table"](spark, sf_dir, ndv="hll")
-    assert exact.schema == hll.schema
-    ex = {r["col_name"]: r["ndv"] for r in exact.collect()}
-    hl = {r["col_name"]: r["ndv"] for r in hll.collect()}
-    assert set(ex) == set(hl)
-    for col, n in ex.items():
-        if n < 50:
-            assert hl[col] == n, (col, n, hl[col])
-        else:
-            assert abs(hl[col] - n) / n <= 0.15, (col, n, hl[col])
-
-
-def test_anomaly_mad_hist_knob_within_bin_width(spark, sf_dir):
-    """mode="hist" keeps the exact form's columns; the binned median
+def test_anomaly_mad_hist_within_bin_width(spark, sf_dir):
+    """anomaly_mad_hist keeps the exact form's columns; the binned median
     is within half a bin of the exact median (grid guarantee), MAD
     within 1.25 (median + deviation binning compound), and the
     outlier count within 15% (the 3-MAD threshold moves by at most
@@ -98,9 +80,7 @@ def test_anomaly_mad_hist_knob_within_bin_width(spark, sf_dir):
         r["event_type"]: r
         for r in _q("anomaly_mad", spark, sf_dir).collect()
     }
-    hist_df = catalog.QUERIES["anomaly_mad"](
-        spark, sf_dir, mode="hist"
-    )
+    hist_df = _q("anomaly_mad_hist", spark, sf_dir)
     assert [f.name for f in hist_df.schema.fields] == [
         "event_type",
         "n",

@@ -1,12 +1,13 @@
 """One invocation scope per catalog run (``catalog.run``).
 
 A run applies the conf its query declared at registration, and when
-it ends — error included — restores that conf (an unset key is unset
-again), releases the caches and scratch dirs made inside it and drops
-its memory-sink views.  A bare ``QUERIES[name]`` call, the way
-``__spark_entry__.queries()`` hands queries out, leaves the session
-conf alone; what it makes outside any run stays until
-``tmpdirs.gc_now()``.
+it ends — error included — restores that conf and any conf set inside
+it (an unset key is unset again), releases the caches and scratch
+dirs made inside it and drops its memory-sink views.  A bare
+``QUERIES[name]`` call, the way ``__spark_entry__.queries()`` hands
+queries out, applies no declared conf; what it makes or sets outside
+any run stays until ``tmpdirs.gc_now()``.  ``tmpdirs.pin`` caches are shared within one
+invocation and never across two.
 """
 
 from __future__ import annotations
@@ -28,6 +29,11 @@ def _catalog():
 
 
 def _cached_rdd_ids(spark) -> set[int]:
+    """Ids of RDDs with materialized cached blocks (storage view).
+
+    Earlier tests can leave ``localCheckpoint`` blocks alive that the
+    registry never owned, so callers assert only on ids that appear
+    after a snapshot taken at the start of their own body."""
     return {
         info.id()
         for info in spark.sparkContext._jsc.sc().getRDDStorageInfo()
@@ -185,3 +191,113 @@ def test_drain_restores_partitions_and_dirs_when_the_batch_raises(
     assert seen == [("2", before[spark] if new_session else "2")]
     assert {s: s.conf.get(key) for s in before} == before
     assert made and not any(os.path.exists(d) for d in made)
+
+
+def test_run_restores_the_confs_load_table_sets(spark, sf_dir):
+    """load_table pins the session time zone to UTC and reads the
+    events parquet's TIMESTAMP(NANOS) through nanosAsLong; both hold
+    for the run only, on a session whose prior time zone is not UTC
+    and where nanosAsLong was never set."""
+    keys = (
+        "spark.sql.session.timeZone",
+        "spark.sql.legacy.parquet.nanosAsLong",
+    )
+    session = spark.newSession()
+    session.conf.set(keys[0], "America/New_York")
+    before = {k: session.conf.get(k, None) for k in keys}
+    assert before[keys[1]] is None
+    for name in ("events_sessionize", "stream_hll"):
+        with catalog.run(name, session, sf_dir) as run:
+            assert run.frame.count() > 0
+            assert session.conf.get(keys[0]) == "UTC"
+        assert {k: session.conf.get(k, None) for k in keys} == before, name
+
+
+def test_pin_fresh_cache_per_invocation(spark):
+    """Two pins of the SAME deterministic plan materialize two
+    distinct cache entries: the second invocation cannot read the
+    first's (the nonce defeats CacheManager structural matching), and
+    gc_now releases both."""
+    tmpdirs.gc_now()
+    before = _cached_rdd_ids(spark)
+    base = spark.range(1000).selectExpr("id", "id * 2 AS v")
+
+    p1 = tmpdirs.pin(base)
+    assert p1.columns == ["id", "v"]  # nonce never leaks into schema
+    assert p1.count() == 1000
+    ids1 = _cached_rdd_ids(spark) - before
+    assert len(ids1) == 1, "first pin did not materialize one cache entry"
+
+    p2 = tmpdirs.pin(base)
+    assert p2.count() == 1000
+    ids2 = _cached_rdd_ids(spark) - before
+    assert len(ids2 - ids1) == 1, (
+        "second invocation's pin plan-matched the first invocation's "
+        "cache instead of materializing its own"
+    )
+
+    tmpdirs.gc_now()
+    assert not _cached_rdd_ids(spark) - before, "registry gc left cached blocks"
+
+
+def test_pin_shared_within_invocation(spark):
+    """Within one invocation, multiple consumers of one pin share ONE
+    materialization (the reason the pins exist at all)."""
+    tmpdirs.gc_now()
+    before = _cached_rdd_ids(spark)
+    p = tmpdirs.pin(spark.range(500).selectExpr("id", "id % 7 AS k"))
+    a = p.groupBy("k").count()
+    b = p.agg({"id": "sum"})
+    a.collect()
+    b.collect()
+    assert len(_cached_rdd_ids(spark) - before) == 1
+    tmpdirs.gc_now()
+    assert not _cached_rdd_ids(spark) - before
+
+
+def test_pin_keeps_a_user_column_named_like_the_nonce(spark):
+    """The nonce column cannot collide with a caller's column: a frame
+    that already has ``_pin_nonce`` keeps it, values intact."""
+    base = spark.range(5).selectExpr("id", "concat('n', id) AS _pin_nonce")
+    p = tmpdirs.pin(base)
+    assert p.columns == ["id", "_pin_nonce"]
+    assert sorted(tuple(r) for r in p.collect()) == [
+        (i, f"n{i}") for i in range(5)
+    ]
+    tmpdirs.gc_now()
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "dsir_weights",
+        "bm25_topk",
+        "previous_values_paned",
+        "profile_table_hll",
+        "dedup_spans",
+        "bug_version_full",
+        "ngram_novelty",
+        "winnow_pairs",
+    ],
+)
+def test_repeat_invocation_computes_cold(spark, sf_dir, name):
+    """The r16-contaminated queries (and the bare-persist ones the
+    audit added): a second invocation materializes NEW cache entries
+    — it never silently reads the first invocation's InMemoryRelation
+    — and the registry releases everything after."""
+    fn = catalog.QUERIES[name]
+
+    tmpdirs.gc_now()
+    before = _cached_rdd_ids(spark)
+    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    ids1 = _cached_rdd_ids(spark) - before
+    assert ids1, f"{name}: no pinned cache materialized at all"
+
+    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    ids2 = _cached_rdd_ids(spark) - before
+    assert ids2 - ids1, (
+        f"{name}: second invocation read the first invocation's cache "
+        "(warm-up would pre-warm every timed bench run)"
+    )
+    tmpdirs.gc_now()
+    assert not _cached_rdd_ids(spark) - before

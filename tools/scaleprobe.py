@@ -101,15 +101,16 @@ DEFAULT_QUERIES = [
     "bpe_encode_join",
 ]
 
-# Knob variants: probe a catalog entry with a non-default parameter
-# (the round-9 verdict's "measure the parked scale knobs ON" item).
-# Spelled name@variant on the command line.
+# Parameter variants: probe a catalog entry at a non-default setting
+# of one of its parameters.  Spelled name@variant on the command line.
 VARIANTS = {
-    "pagerank_trade@persist": ("pagerank_trade", {"persist_edges": True}),
+    # a doubled backbone cap: the broadcast-side count costs
+    # ~backbone^1.5, so the decade slope must stay the corpus-side
+    # projection's while the constant grows
     "triangle_count@backbone2x": ("triangle_count", {"backbone": 10000}),
-    # r15: the full-md5 gram hash — 32-byte shuffle keys instead of
-    # 8; the decade exponent must stay at the 60-bit form's slope
-    # (the shuffle carries the hash either way, only wider)
+    # the full-md5 gram hash — 32-byte shuffle keys instead of 8;
+    # the decade exponent must stay at the 60-bit form's slope (the
+    # shuffle carries the hash either way, only wider)
     "dedup_spans@md5": ("dedup_spans", {"hash_bits": 128}),
 }
 
